@@ -42,7 +42,9 @@ def main(argv: list[str] | None = None) -> int:
     )
     for name, df in res.star.items():
         print(f"{name}: {df.count()} rows")
-    n_quarantined = res.audits["sfcc_quarantine"].count()
+    n_quarantined = sum(
+        res.audits[k].count() for k in ("sfcc_quarantine", "cegid_quarantine")
+    )
     n_missing = res.audits["missing_products"].count()
     print(f"quarantined source rows: {n_quarantined}")
     print(f"unresolved product names: {n_missing}")

@@ -15,6 +15,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
+
+from finegourmet_spark.star.schemas import STAR_SCHEMAS
 
 
 def write_dim(df: DataFrame, out_dir: str, name: str) -> None:
@@ -62,10 +65,45 @@ def backfill_months(fact_delta: DataFrame, out_dir: str, name: str = "Fact_Sales
 
 
 def read_star(spark: SparkSession, out_dir: str) -> dict[str, DataFrame]:
+    """The written star, read with the pinned ``STAR_SCHEMAS``: building a
+    query over it launches no Spark job."""
     return {
-        name: spark.read.parquet(f"{out_dir}/{name}")
-        for name in ("Dim_Client", "Dim_Product", "Dim_Store", "Fact_Sales")
+        name: spark.read.schema(schema).parquet(f"{out_dir}/{name}")
+        for name, schema in STAR_SCHEMAS.items()
     }
+
+
+_INTEGRAL_BYTES = {"tinyint": 1, "smallint": 2, "int": 4, "bigint": 8}
+
+
+def _widens_to(have: DataType, want: DataType) -> bool:
+    """``have`` is ``want``, or an integral type ``want`` holds losslessly."""
+    if have == want:
+        return True
+    a = _INTEGRAL_BYTES.get(have.simpleString())
+    b = _INTEGRAL_BYTES.get(want.simpleString())
+    return a is not None and b is not None and a <= b
+
+
+def _conform_delta(delta: DataFrame, name: str) -> DataFrame:
+    """``delta`` cast to the table's pinned column types (partition column
+    excluded), or ValueError when its columns differ or a type would not
+    widen losslessly. Unchecked, ``unionByName`` would widen the merged
+    rewrite to the delta's type (a double Price makes the touched months
+    double) and the pinned reads would disagree with the files."""
+    want = {f.name: f.dataType for f in STAR_SCHEMAS[name].fields if f.name != "Sale_Month"}
+    have = {f.name: f.dataType for f in delta.schema.fields}
+    if set(have) != set(want):
+        problems = [f"columns {sorted(have)}, table has {sorted(want)}"]
+    else:
+        problems = [
+            f"{c} is {have[c].simpleString()}, table has {t.simpleString()}"
+            for c, t in want.items()
+            if not _widens_to(have[c], t)
+        ]
+    if problems:
+        raise ValueError(f"merge_by_key: delta does not match {name}: {'; '.join(problems)}")
+    return delta.select(*[F.col(c).cast(t).alias(c) for c, t in want.items()])
 
 
 def merge_by_key(
@@ -102,8 +140,14 @@ def merge_by_key(
         broadcast semi-join, no shuffle) and failing loudly on violation;
         disable for bulk backfills where the full-table key-column scan is
         not worth it and the invariant is guaranteed upstream.
+
+    The delta must carry the table's columns with its pinned types
+    (``STAR_SCHEMAS``; narrower integral types are widened), else
+    ValueError before anything is read or written.
     """
-    delta = delta.withColumn("Sale_Month", F.date_format("Date", "yyyy-MM"))
+    delta = _conform_delta(delta, name).withColumn(
+        "Sale_Month", F.date_format("Date", "yyyy-MM")
+    )
     months = [r["Sale_Month"] for r in delta.select("Sale_Month").distinct().collect()]
     # NULL months (malformed dates land in the default partition) need an
     # explicit IS NULL arm — `isin` never matches NULL, which would silently
@@ -116,7 +160,7 @@ def merge_by_key(
     # one read (one file listing / InMemoryFileIndex) reused by both the
     # validation scan and the kept-rows scan (r2 review: double LIST calls
     # over all partitions are a real object-store cost at scale)
-    fact = spark.read.parquet(f"{out_dir}/{name}")
+    fact = spark.read.schema(STAR_SCHEMAS[name]).parquet(f"{out_dir}/{name}")
     if validate_immutable_dates:
         # out-of-scope = NOT month_pred, with NULL months folding to
         # out-of-scope unless the delta itself touches the null month
@@ -170,7 +214,7 @@ def compact_partitions(
     only the listed months (default: all) are touched."""
     import math
 
-    fact = spark.read.parquet(f"{out_dir}/{name}")
+    fact = spark.read.schema(STAR_SCHEMAS[name]).parquet(f"{out_dir}/{name}")
     month_vals = months or [
         r["Sale_Month"] for r in fact.select("Sale_Month").distinct().collect()
     ]

@@ -45,7 +45,9 @@ def run_pipeline(
     # extract (single glob scans, explicit schemas)
     raw_sfcc = sources.read_sfcc(spark, sfcc_glob)
     sfcc_clean, sfcc_quarantine = sources.split_quarantine(raw_sfcc)
-    raw_cegid = sources.read_cegid(spark, cegid_path)
+    cegid_clean, cegid_quarantine = sources.split_quarantine(
+        sources.read_cegid(spark, cegid_path)
+    )
     raw_products = sources.read_products(spark, products_glob)
     boutiques = sources.read_boutiques(spark, boutiques_path)
 
@@ -55,7 +57,7 @@ def run_pipeline(
 
     # conform (cached: consumed by dim_client + fact + audits)
     c_sfcc = conform.conform_sfcc(sfcc_clean, dim_product).cache()
-    c_cegid = conform.conform_cegid(raw_cegid, dim_product).cache()
+    c_cegid = conform.conform_cegid(cegid_clean, dim_product).cache()
 
     dim_client = dims.build_dim_client(c_sfcc, c_cegid).cache()
     fact_sales = fact.build_fact_sales(c_sfcc, c_cegid, dim_client, dim_product)
@@ -79,6 +81,7 @@ def run_pipeline(
     }
     audits = {
         "sfcc_quarantine": sfcc_quarantine,
+        "cegid_quarantine": cegid_quarantine,
         "missing_products": conform.audit_missing_products(c_cegid),
     }
     if out_dir:

@@ -8,6 +8,12 @@ withColumnRenamed calls (ref etl/extract.py:70-81)."""
 from __future__ import annotations
 
 from pyspark.sql.types import (
+    DataType,
+    DateType,
+    DecimalType,
+    DoubleType,
+    IntegerType,
+    LongType,
     StringType,
     StructField,
     StructType,
@@ -35,8 +41,9 @@ SFCC_SCHEMA = _s(
     "sms_optin",
 )
 
-#: corrupt-record rescue column appended to SFCC reads (the reference
-#: silently mangles shifted rows — engine quarantines; SURVEY.md §5 item 2)
+#: corrupt-record rescue column appended to SFCC and CEGID reads (the
+#: reference silently mangles shifted rows — engine quarantines; SURVEY.md §5
+#: item 2)
 CORRUPT_COL = "_corrupt_record"
 
 CEGID_SCHEMA = _s(
@@ -73,4 +80,46 @@ PRODUCT_RENAMES = {
     "product_name": "Name",
     "price": "Price",
     "category": "Category",
+}
+
+
+def _typed(*fields: tuple[str, DataType]) -> StructType:
+    return StructType([StructField(n, t, True) for n, t in fields])
+
+
+#: The star as ``load.write_star`` writes it, ``Sale_Month`` being
+#: Fact_Sales' partition column. Every star read passes its schema to
+#: ``spark.read.schema``: an unpinned ``spark.read.parquet`` launches a
+#: footer-inference job per table reference, four per dashboard query.
+STAR_SCHEMAS = {
+    "Dim_Client": _typed(
+        ("Client_ID", LongType()),
+        ("Email", StringType()),
+        ("Last_Name", StringType()),
+        ("First_Name", StringType()),
+        ("Phone", StringType()),
+        ("Address", StringType()),
+    ),
+    "Dim_Product": _typed(
+        ("Product_ID", StringType()),
+        ("Name", StringType()),
+        ("Category", StringType()),
+        ("Price", DoubleType()),
+    ),
+    "Dim_Store": _typed(
+        ("Store_ID", StringType()),
+        ("Name", StringType()),
+        ("Address", StringType()),
+    ),
+    "Fact_Sales": _typed(
+        ("Sale_ID", StringType()),
+        ("Quantity", IntegerType()),
+        ("Price", DecimalType(10, 2)),
+        ("Type", StringType()),
+        ("Date", DateType()),
+        ("FK_Client_ID", LongType()),
+        ("FK_Product_ID", StringType()),
+        ("FK_Store_ID", StringType()),
+        ("Sale_Month", StringType()),
+    ),
 }

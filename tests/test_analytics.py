@@ -149,3 +149,32 @@ def test_sql_views_match_dataframe_analytics(spark, star):
         dfr = fn()
         b = canonical_rows(dfr.columns, [tuple(r) for r in dfr.collect()])
         assert a == b, f"SQL vs DataFrame mismatch for {name}"
+
+
+def test_star_schemas_match_written_star(spark, star_dir):
+    """The pinned schemas are exactly what Spark infers from the files
+    write_star wrote."""
+    from finegourmet_spark.star.schemas import STAR_SCHEMAS
+
+    for name, schema in STAR_SCHEMAS.items():
+        assert spark.read.parquet(f"{star_dir}/{name}").schema == schema, name
+
+
+def test_building_dashboard_queries_launches_no_jobs(spark, star_dir):
+    """read_star plus every dashboard query is built without a Spark job:
+    the pinned schemas leave no footer to infer."""
+    import inspect
+
+    sc = spark.sparkContext
+    group = "star-build-no-jobs"
+    sc.setJobGroup(group, "build the dashboard queries")
+    try:
+        star = read_star(spark, star_dir)
+        tables = {"fact": star["Fact_Sales"], "dim_product": star["Dim_Product"],
+                  "dim_store": star["Dim_Store"], "dim_client": star["Dim_Client"]}
+        for fn in analytics.ALL.values():
+            params = inspect.signature(fn).parameters.values()
+            fn(*[tables[p.name] for p in params if p.default is inspect.Parameter.empty])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

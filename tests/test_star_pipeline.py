@@ -354,3 +354,102 @@ def test_star_scale_replicator_factor3(spark, tmp_path_factory):
     assert n_suffixed == 3 * n_base_suffixed
     # FK integrity: bounded dims resolve identically in every copy
     assert fact.filter(F.col("FK_Product_ID").isNull()).count() == 3 * 0
+
+
+def _without_encoding(spark, path):
+    """The CEGID read as it was before the explicit encoding: Spark detects
+    the charset and parses a byte stream."""
+    from finegourmet_spark.star.schemas import CEGID_SCHEMA
+
+    return spark.read.schema(CEGID_SCHEMA).option("multiline", "true").json(path)
+
+
+def _assert_cegid_rows_unchanged(spark, path):
+    from finegourmet_spark.star.schemas import CORRUPT_COL
+    from finegourmet_spark.star.sources import read_cegid
+
+    fast = read_cegid(spark, path).cache()
+    try:
+        assert fast.filter(F.col(CORRUPT_COL).isNotNull()).count() == 0
+        got = sorted(tuple(r) for r in fast.drop(CORRUPT_COL).collect())
+    finally:
+        fast.unpersist()
+    want = sorted(tuple(r) for r in _without_encoding(spark, path).collect())
+    assert got and got == want
+
+
+def test_cegid_encoding_keeps_rows_on_fixtures(spark, tmp_path_factory):
+    paths = write_fixtures(str(tmp_path_factory.mktemp("cegid_fixtures")))
+    _assert_cegid_rows_unchanged(spark, paths["cegid_path"])
+
+
+def test_cegid_encoding_keeps_rows_on_generated_shards(spark, tmp_path_factory):
+    """The benchmark's generated CEGID shards: numbers in price and
+    quantity, the "x" price, null emails, 8 shards."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "perfbench"))
+    try:
+        import stargen
+    finally:
+        sys.path.pop(0)
+    gen = stargen.generate(str(tmp_path_factory.mktemp("stargen")), 2400, 11)
+    _assert_cegid_rows_unchanged(spark, gen["paths"]["cegid_path"])
+
+
+def test_unparseable_cegid_shards_are_quarantined(spark, tmp_path_factory):
+    """A truncated shard and a UTF-8 BOM-prefixed shard each parse as one
+    corrupt record. Both land in the CEGID quarantine with their text; none
+    becomes a phantom fact row with a NULL Sale_ID."""
+    import json
+    import os
+
+    root = str(tmp_path_factory.mktemp("cegid_bad_shards"))
+    paths = write_fixtures(root)
+    cegid_dir = os.path.dirname(paths["cegid_path"])
+    extra = [
+        {"sale_id": "PA01240400001", "email": None, "transaction_date": "2024-04-02",
+         "product_name": "Comte 18 mois", "quantity": 1, "price": 21.0},
+    ]
+    text = json.dumps(extra, indent=1)
+    with open(os.path.join(cegid_dir, "2024_cegid_sales_truncated.json"), "w") as f:
+        f.write(text[: len(text) // 2])
+    with open(os.path.join(cegid_dir, "2024_cegid_sales_bom.json"), "w", encoding="utf-8-sig") as f:
+        f.write(text)
+    res = run_pipeline(spark, **{**paths, "cegid_path": os.path.join(cegid_dir, "*.json")})
+
+    fact = res.star["Fact_Sales"].collect()
+    assert len(fact) == 12  # the fixtures' 5 SFCC + 7 CEGID rows, nothing more
+    assert all(r["Sale_ID"] is not None for r in fact)
+    assert "PA01240400001" not in {r["Sale_ID"] for r in fact}
+    quarantined = sorted(
+        r["_corrupt_record"] for r in res.audits["cegid_quarantine"].collect()
+    )
+    assert len(quarantined) == 2
+    assert quarantined[0].startswith("[") and quarantined[1].startswith("\ufeff[")
+    assert all("PA01240400001" in q for q in quarantined)
+
+
+def test_merge_by_key_rejects_delta_types(spark, result, tmp_path_factory):
+    """The delta must carry Fact_Sales' pinned types: a double Price would
+    widen the rewritten months to double, which the pinned reads disagree
+    with. A narrower integral FK_Client_ID is widened and merges."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from finegourmet_spark.star.load import merge_by_key, write_star
+    from finegourmet_spark.star.schemas import STAR_SCHEMAS
+
+    out = str(tmp_path_factory.mktemp("star_merge_types"))
+    write_star(result.star, out)
+    row = result.star["Fact_Sales"].filter(F.col("Sale_ID") == "PA01240100001")
+    with pytest.raises(ValueError, match="Price is double, table has decimal"):
+        merge_by_key(spark, out, row.withColumn("Price", F.lit(99.99)))
+    with pytest.raises(ValueError, match="columns"):
+        merge_by_key(spark, out, row.drop("Type"))
+
+    merge_by_key(spark, out, row.withColumn("FK_Client_ID", F.col("FK_Client_ID").cast("int")))
+    back = spark.read.parquet(f"{out}/Fact_Sales")
+    assert back.schema == STAR_SCHEMAS["Fact_Sales"]
+    assert back.count() == result.star["Fact_Sales"].count()
