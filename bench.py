@@ -121,6 +121,11 @@ def main() -> None:
     }
     timings: dict[str, float] = {}
     plan_builds: dict[str, float] = {}
+    # generated classes Janino compiled (each cache miss of Spark's codegen
+    # cache is one compile; its time lands inside execution)
+    codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = codegen.METRIC_COMPILATION_TIME()
+    codegen_compiles: dict[str, int] = {}
     for name in HEADLINE:
         if name in skip:
             continue
@@ -139,11 +144,13 @@ def main() -> None:
         plan_builds[name] = round(time.perf_counter() - t0, 3)
         df.write.format("noop").mode("overwrite").save()  # warm: JIT+IO cache
         best = float("inf")
+        compiles_before = compiled.getCount()
         for _ in range(2):  # min-of-2 damps JIT/GC noise
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             best = min(best, time.perf_counter() - t0)
         timings[name] = round(best, 3)
+        codegen_compiles[name] = compiled.getCount() - compiles_before
 
     sf = os.path.basename(sf_dir.rstrip("/")).removeprefix("sf")
     try:
@@ -158,6 +165,9 @@ def main() -> None:
         "sf": sf_val,
         "plan_build_s": plan_builds,  # additions-only key (r14): per-query
         # construction+analysis seconds, measured outside the timed runs
+        "codegen_compiles": codegen_compiles,  # additions-only key: classes
+        # compiled during each query's two timed runs (0 when the warm run's
+        # classes stayed cached)
         "loadavg_prerun": loadavg,
         "cpu_canary_s": cpu_canary,
         "membw_canary_s": membw_canary,

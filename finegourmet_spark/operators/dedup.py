@@ -637,9 +637,12 @@ def _simhash_popcount_batches(it):
             nonempty = lens > 0
             pops = np.zeros((len(pdf), 64), dtype=np.int64)
             # reduceat over the nonempty docs only (an empty doc's
-            # popcounts stay 0 — reduceat mishandles 0-length segments)
+            # popcounts stay 0 — reduceat mishandles 0-length segments).
+            # Accumulated straight from the uint8 bits in int32 (a count
+            # is at most the doc's token count), so no int64 copy of
+            # ``bits`` (8x its size) is made per batch.
             pops[nonempty] = np.add.reduceat(
-                bits.astype(np.int64), starts[nonempty], axis=0
+                bits, starts[nonempty], axis=0, dtype=np.int32
             )
             bitvals = (2 * pops > lens[:, None]).astype(np.uint64)
             sims = (bitvals << np.arange(64, dtype=np.uint64)[None, :]).sum(

@@ -97,6 +97,20 @@ def get_spark(
             "spark.sql.parquet.compression.codec",
             os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "zstd"),
         )
+        # Generated-class cache (CodegenMetrics, perfbench on local[2]):
+        # one etl_star pass builds about 190 distinct classes (write
+        # 113-120, merge 17-18, the 8 dashboard queries about 55), and
+        # Spark's default of 100 entries, evicted LRU, is smaller than
+        # that, so every pass recompiled nearly all of them with Janino
+        # (184-185 per later pass at 100; 3-5 at 1000 or 2000, which is
+        # new code, not eviction). The recompiles hide in execution time,
+        # not in Catalyst's phases. Kept classes are also not re-JITted:
+        # JVM CodeCache after 3 passes 34.6 -> 19.6 MB, Metaspace
+        # 150.0 -> 147.8 MB. (llm_curation's 91 classes per pass fit in
+        # 100.) Static conf: it takes effect only when set before the
+        # session starts. On a cluster every executor keeps the same
+        # bounded cache and would recompile per task under the same thrash.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # keep driver logs readable
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))

@@ -125,7 +125,14 @@ def merge_by_key(
     this is the engine's MERGE INTO; this is the same algorithm expressed on
     plain parquet.)
 
-    Two safety rails (ADVICE r1):
+    Three safety rails (ADVICE r1):
+      * the conformed delta is eagerly localCheckpoint-ed once, up front.
+        It has four consumers (the months collect, the stray-key check,
+        the anti-join keys and the rewrite); unpinned, its plan would run
+        once for each, and a nondeterministic delta could put a row in a
+        month missing from ``months``, whose dynamic overwrite would
+        replace that partition and lose its old rows. Evaluated once,
+        every consumer sees the same rows.
       * ``kept`` is eagerly localCheckpoint-ed BEFORE the overwrite — its
         plan lazily reads the very partitions the dynamic overwrite rewrites,
         which is the read-and-overwrite-same-path hazard Spark normally
@@ -145,8 +152,10 @@ def merge_by_key(
     (``STAR_SCHEMAS``; narrower integral types are widened), else
     ValueError before anything is read or written.
     """
-    delta = _conform_delta(delta, name).withColumn(
-        "Sale_Month", F.date_format("Date", "yyyy-MM")
+    delta = (
+        _conform_delta(delta, name)
+        .withColumn("Sale_Month", F.date_format("Date", "yyyy-MM"))
+        .localCheckpoint(eager=True)
     )
     months = [r["Sale_Month"] for r in delta.select("Sale_Month").distinct().collect()]
     # NULL months (malformed dates land in the default partition) need an

@@ -453,3 +453,60 @@ def test_merge_by_key_rejects_delta_types(spark, result, tmp_path_factory):
     back = spark.read.parquet(f"{out}/Fact_Sales")
     assert back.schema == STAR_SCHEMAS["Fact_Sales"]
     assert back.count() == result.star["Fact_Sales"].count()
+
+
+def test_merge_by_key_evaluates_delta_once(spark, result, tmp_path_factory):
+    """The delta's plan runs once, however many consumers it has (months,
+    stray-key check, anti-join keys, rewrite): a nondeterministic delta
+    could otherwise land a row in a month the merge did not scope, and
+    that month's dynamic overwrite would drop its old rows."""
+    from pyspark.sql.types import BooleanType
+
+    from finegourmet_spark.star.load import merge_by_key, write_star
+
+    out = str(tmp_path_factory.mktemp("star_merge_once"))
+    write_star(result.star, out)
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def counted(_key):
+        evaluated.add(1)
+        return True
+
+    # a filter, unlike a projected column, runs in every consumer's plan
+    fact = result.star["Fact_Sales"]
+    delta = fact.filter(F.udf(counted, BooleanType())("Sale_ID"))
+    merge_by_key(spark, out, delta)
+    assert evaluated.value == fact.count()
+
+
+def test_second_etl_round_reuses_generated_code(spark, tmp_path_factory):
+    """A second ETL round (pipeline, write, merge, the 8 dashboard queries)
+    compiles almost no new classes: one round generates more than Spark's
+    default codegen cache of 100 holds, so at that size every round
+    recompiled them all (session.py sizes the cache)."""
+    import inspect
+
+    from finegourmet_spark.star import analytics
+    from finegourmet_spark.star.load import merge_by_key, read_star, write_star
+
+    paths = write_fixtures(str(tmp_path_factory.mktemp("codegen_sources")))
+    out = str(tmp_path_factory.mktemp("codegen_star"))
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def etl_round():
+        spark.catalog.clearCache()
+        res = run_pipeline(spark, **paths)
+        write_star(res.star, out)
+        merge_by_key(spark, out, res.star["Fact_Sales"].filter(F.col("Sale_ID") == "PA01240100001"))
+        star = read_star(spark, out)
+        tables = {"fact": star["Fact_Sales"], "dim_product": star["Dim_Product"],
+                  "dim_store": star["Dim_Store"], "dim_client": star["Dim_Client"]}
+        for fn in analytics.ALL.values():
+            params = inspect.signature(fn).parameters.values()
+            fn(*[tables[p.name] for p in params if p.default is inspect.Parameter.empty]).collect()
+
+    etl_round()
+    before = compiles.getCount()
+    etl_round()
+    assert compiles.getCount() - before <= 10
