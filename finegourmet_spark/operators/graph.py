@@ -34,10 +34,8 @@ from pyspark.sql.window import Window
 
 from finegourmet_spark.operators.registry import query
 from finegourmet_spark.operators.scratch import (
-    pass_log as _pass_log,
-    release_pass_shuffles as _release_pass_shuffles,
-    scratch_pressure as _scratch_pressure,
-    shuffle_scratch_bytes as _shuffle_scratch_bytes,
+    pass_log,
+    release_pass_shuffles,
     sliced_exchange,
 )
 from finegourmet_spark.sources.testdata import load_table as t
@@ -425,8 +423,8 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
                         wedges.filter(sl), closer.filter(sl), p
                     ).first()[0]
                 )
-                _release_pass_shuffles(spark)
-                _pass_log(f"triangles closure pass {i + 1}/{passes} done")
+                release_pass_shuffles(spark)
+                pass_log(f"triangles closure pass {i + 1}/{passes} done")
     finally:
         oriented.unpersist(blocking=False)
     closure_ppm = (
@@ -504,13 +502,6 @@ _PPM = 1_000_000
 # ~2M pair keys per task keeps the final hash-agg map ≈ 80 MB — 32
 # concurrent local tasks then fit a default 8 GB heap with headroom.
 _WEDGE_ROWS_PER_PART = 2_000_000
-
-
-# _shuffle_scratch_bytes / _scratch_pressure / _release_pass_shuffles /
-# _pass_log moved VERBATIM to operators/scratch.py (VERDICT r12 item 4:
-# three ops shared the governor; consolidate before a fourth copy
-# drifts) and are re-imported above under their old names for the
-# existing importers (tests/test_eventflow_graph.py, tools/).
 
 
 _CLOSURE_SCRATCH_ENV = "SPARK_GRAFT_CLOSURE_SCRATCH_GB"
@@ -841,8 +832,8 @@ def _jaccard_topk(
                     .limit(JACC_TOPN)
                     .collect()
                 )
-                _release_pass_shuffles(spark)
-                _pass_log(
+                release_pass_shuffles(spark)
+                pass_log(
                     f"jaccard slice {i + 1}/{passes} done "
                     f"({len(winners)} winner rows so far)"
                 )

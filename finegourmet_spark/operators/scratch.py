@@ -8,8 +8,7 @@ setsim/containment's prep+verify slices (dedup.py) — each needing to
 (c) run an exchange in K hash-disjoint slices so peak scratch is
     ~exchange/K instead of the whole exchange at once.
 VERDICT r12 item 4 consolidates the machinery here before a fourth copy
-drifts. The functions were moved verbatim from operators/graph.py
-(which re-exports them under their old names for existing importers);
+drifts. The functions were moved verbatim from operators/graph.py;
 ``phase_barrier`` moved from operators/dedup.py; ``sliced_exchange`` is
 the shared slice loop that graph.py's CF and dedup.py's setsim prep /
 verify phases previously each inlined.

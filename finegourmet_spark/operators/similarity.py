@@ -7,6 +7,12 @@ assignment), so each probe touches 1/n_buckets of the corpus; the bucket
 join co-partitions both sides on the bucket key, turning O(N²) into
 O(N²/buckets) with no broadcast of the corpus.
 
+Every exact top-k variant shares one core and keeps only its candidate
+generator (all pairs, same label, k-means cell, GEMM-pruned superset, PQ
+shortlist, held-out split): ``probes`` builds the probe set with its norm,
+``scored_pairs`` is the one broadcast of that set plus the rounded cosine,
+and ``top_k`` is the deterministic rank filter.
+
 Dot products are JVM-side (`zip_with` + `aggregate` fold, element order
 fixed) — no Python in the O(N·k) path. Scores are rounded to 6 decimals
 *before* ranking so rank boundaries are stable across engines/partitionings
@@ -55,8 +61,40 @@ def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+def probes(e: DataFrame, pred: Column, *carry: Column) -> DataFrame:
+    """``query_id``, ``carry``, the vector ``qe`` and its norm ``qnorm`` of the
+    rows matching ``pred``. The norm is projected per vector, below the join
+    (a CollapseProject barrier), not per pair."""
+    return e.filter(pred).select(
+        F.col("vec_id").alias("query_id"),
+        *carry,
+        F.col("embedding").alias("qe"),
+        norm(F.col("embedding")).alias("qnorm"),
+    )
+
+
+def scored_pairs(
+    candidates: DataFrame, probe_df: DataFrame, on: Column | str | None, *keep: Column | str
+) -> DataFrame:
+    """``keep`` plus the rounded ``cos_sim`` of each candidate (carrying
+    ``embedding`` and its norm ``enorm``) joined ``on`` its probe. The probe
+    set is bounded by N_QUERIES or KNN_N_TEST rows, so it broadcasts.
+    dot/(qnorm·enorm) is the oracles' per-pair IEEE expression, bit for bit."""
+    return candidates.join(F.broadcast(probe_df), on).select(
+        *keep,
+        F.round(
+            dot(F.col("qe"), F.col("embedding")) / (F.col("qnorm") * F.col("enorm")), 6
+        ).alias("cos_sim"),
+    )
+
+
+def top_k(
+    df: DataFrame, k: int = TOP_K, score: str = "cos_sim", rank: str = "rank"
+) -> DataFrame:
+    """The ``k`` best rows per ``query_id`` by ``score``, ``neighbor_id``
+    breaking ties, numbered in ``rank``."""
+    w = Window.partitionBy("query_id").orderBy(F.col(score).desc(), F.col("neighbor_id"))
+    return df.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
 
 
 # DuckDB twins (same sequential element order via list_transform + explicit fold)
@@ -94,25 +132,10 @@ def q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k via the rank window. This is the exact baseline an ANN variant
     (q_similarity_ivf) is measured against."""
     e = t(spark, sf_dir, "embeddings")
-    # norms precomputed per VECTOR (projections below the join are evaluated
-    # once per input row, not per pair — the join is a CollapseProject
-    # barrier); cos = dot/(norm_q*norm_e) is the same IEEE expression as the
-    # per-pair form, so values stay bit-identical to the oracle
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        norm(F.col("embedding")).alias("qnorm"),
-    )
     corpus = e.select("vec_id", "embedding", norm(F.col("embedding")).alias("enorm"))
-    scored = corpus.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(
-            dot(F.col("qe"), F.col("embedding")) / (F.col("qnorm") * F.col("enorm")), 6
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= TOP_K)
+    q = probes(e, F.col("vec_id") < N_QUERIES)
+    on = F.col("vec_id") != F.col("query_id")
+    return top_k(scored_pairs(corpus, q, on, "query_id", F.col("vec_id").alias("neighbor_id")))
 
 
 @query(
@@ -140,27 +163,10 @@ def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-partitions corpus and probes on the cell id: each cell's scoring is
     local to one task, the full corpus is never cross-joined."""
     e = t(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("qlabel"),
-        F.col("embedding").alias("qe"),
-        norm(F.col("embedding")).alias("qnorm"),
-    )
-    corpus = e.select(
-        "vec_id", "label", "embedding", norm(F.col("embedding")).alias("enorm")
-    )
-    scored = corpus.join(
-        F.broadcast(q),
-        (F.col("label") == F.col("qlabel")) & (F.col("vec_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(
-            dot(F.col("qe"), F.col("embedding")) / (F.col("qnorm") * F.col("enorm")), 6
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= TOP_K)
+    corpus = e.select("vec_id", "label", "embedding", norm(F.col("embedding")).alias("enorm"))
+    q = probes(e, F.col("vec_id") < N_QUERIES, F.col("label").alias("qlabel"))
+    on = (F.col("label") == F.col("qlabel")) & (F.col("vec_id") != F.col("query_id"))
+    return top_k(scored_pairs(corpus, q, on, "query_id", F.col("vec_id").alias("neighbor_id")))
 
 
 # the embedding near-dup decision threshold — single-sourced: used by
@@ -311,22 +317,10 @@ def q_similarity_topk_np(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates = e.select("vec_id", "embedding").mapInPandas(
         prune_batches, cand_schema
     )
-    # exact re-rank: identical expression tree to q_similarity_topk / the
-    # oracle, evaluated only over the pruned candidates (probe side broadcast)
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    scored = candidates.join(F.broadcast(q), "query_id").select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine(F.col("qe"), F.col("embedding")), 6).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= TOP_K
-    )
+    # exact re-rank: the q_similarity_topk scorer over the pruned candidates only
+    candidates = candidates.withColumn("enorm", norm(F.col("embedding")))
+    q = probes(e, F.col("vec_id") < N_QUERIES)
+    return top_k(scored_pairs(candidates, q, "query_id", "query_id", "neighbor_id"))
 
 
 @query("q_similarity_ivf_kmeans")  # rows-only: trained centroids are engine-specific
@@ -357,27 +351,12 @@ def q_similarity_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         feats.select("features")
     )
     assigned = model.transform(feats).select(
-        "vec_id", "embedding", "cell", norm(F.col("embedding")).alias("vnorm")
+        "vec_id", "embedding", "cell", norm(F.col("embedding")).alias("enorm")
     )
-    q = assigned.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("cell").alias("qcell"),
-        F.col("embedding").alias("qe"),
-        F.col("vnorm").alias("qnorm"),
-    )
-    scored = assigned.join(
-        F.broadcast(q),
-        (F.col("cell") == F.col("qcell")) & (F.col("vec_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("cell"),
-        F.round(
-            dot(F.col("qe"), F.col("embedding")) / (F.col("qnorm") * F.col("vnorm")), 6
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= TOP_K)
+    q = probes(assigned, F.col("vec_id") < N_QUERIES, F.col("cell").alias("qcell"))
+    on = (F.col("cell") == F.col("qcell")) & (F.col("vec_id") != F.col("query_id"))
+    keep = ("query_id", F.col("vec_id").alias("neighbor_id"), "cell")
+    return top_k(scored_pairs(assigned, q, on, *keep))
 
 
 PQ_M = 16  # subspaces (64 dims → 4 dims each)
@@ -484,37 +463,16 @@ def q_similarity_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
 
     cand = e.select("vec_id", "embedding").mapInPandas(score, out_schema)
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("approx_sim").desc(), F.col("neighbor_id")
-    )
-    shortlist = cand.withColumn("adc_rank", F.row_number().over(w_adc)).filter(
-        F.col("adc_rank") <= TOP_K * 4
-    )
+    shortlist = top_k(cand, TOP_K * 4, "approx_sim", "adc_rank")
     # exact re-rank: floats touch ONLY the shortlist (4k rows per probe)
-    probes_df = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        norm(F.col("embedding")).alias("qnorm"),
-    )
     corpus = e.select(
         F.col("vec_id").alias("neighbor_id"),
         "embedding",
         norm(F.col("embedding")).alias("enorm"),
     )
-    exact = (
-        shortlist.join(corpus, "neighbor_id")
-        .join(F.broadcast(probes_df), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("qe"), F.col("embedding")) / (F.col("qnorm") * F.col("enorm")),
-                6,
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return exact.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= TOP_K)
+    q = probes(e, F.col("vec_id") < N_QUERIES)
+    pairs = shortlist.join(corpus, "neighbor_id")
+    return top_k(scored_pairs(pairs, q, "query_id", "query_id", "neighbor_id"))
 
 
 N_PLANES = 16  # 4 tables × 4 sign bits (floor; widens with corpus size)
@@ -603,8 +561,8 @@ def lsh_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("q_similarity_lsh")  # rows-only: hash-seeded planes are engine-specific
 def q_similarity_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cosine-LSH candidate pairs: vectors sharing any (table, bucket). The
-    pair space shrinks from O(N²) to colliding pairs; exact cosine re-scoring
-    of candidates is then q_similarity_topk's job on the candidate set.
+    pair space shrinks from O(N²) to colliding pairs; exact re-scoring of the
+    candidates is then ``scored_pairs`` + ``top_k``'s job on the candidate set.
     Recall vs the exact top-1 neighbors is pytest-verified
     (tests/test_approx_and_lsh.py)."""
     assigned = lsh_tables(spark, sf_dir)
@@ -711,34 +669,16 @@ def q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata-scale. Determinism: cosine rounded to 6dp before ranking,
     neighbor_id tie-break, then (votes DESC, label) argmax."""
     e = t(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < KNN_N_TEST).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("true_label"),
-        F.col("embedding").alias("qe"),
-        norm(F.col("embedding")).alias("qnorm"),
-    )
     corpus = e.filter(F.col("vec_id") >= KNN_N_TEST).select(
         "vec_id",
         F.col("label").alias("nlabel"),
         "embedding",
         norm(F.col("embedding")).alias("enorm"),
     )
-    scored = corpus.join(F.broadcast(q)).select(
-        "query_id",
-        "true_label",
-        "nlabel",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(
-            dot(F.col("qe"), F.col("embedding")) / (F.col("qnorm") * F.col("enorm")),
-            6,
-        ).alias("cos_sim"),
-    )
-    rk = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
+    q = probes(e, F.col("vec_id") < KNN_N_TEST, F.col("label").alias("true_label"))
+    keep = ("query_id", "true_label", "nlabel", F.col("vec_id").alias("neighbor_id"))
     votes = (
-        scored.withColumn("rk", F.row_number().over(rk))
-        .filter(F.col("rk") <= KNN_K)
+        top_k(scored_pairs(corpus, q, None, *keep), KNN_K, rank="rk")
         .groupBy("query_id", "true_label", "nlabel")
         .agg(F.count(F.lit(1)).alias("n_votes"))
     )

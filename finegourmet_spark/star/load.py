@@ -24,14 +24,23 @@ def write_dim(df: DataFrame, out_dir: str, name: str) -> None:
     df.write.mode("overwrite").parquet(f"{out_dir}/{name}")
 
 
-def write_fact(fact: DataFrame, out_dir: str, name: str = "Fact_Sales") -> None:
+def _write_months(df: DataFrame, path: str, dynamic: bool, n_files: int | None = None) -> None:
+    """Overwrite ``path`` partitioned by Sale_Month: one writer group per
+    month (no tiny files), or ``n_files`` files. ``dynamic`` replaces only
+    the months ``df`` holds. The mode is a writer option, so the session's
+    ``partitionOverwriteMode`` never changes under a concurrent query."""
+    parts = df.repartition(n_files) if n_files else df.repartition("Sale_Month")
     (
-        fact.withColumn("Sale_Month", F.date_format("Date", "yyyy-MM"))
-        .repartition("Sale_Month")  # one writer-group per partition → no tiny files
-        .write.mode("overwrite")
+        parts.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic" if dynamic else "static")
         .partitionBy("Sale_Month")
-        .parquet(f"{out_dir}/{name}")
+        .parquet(path)
     )
+
+
+def write_fact(fact: DataFrame, out_dir: str, name: str = "Fact_Sales") -> None:
+    fact = fact.withColumn("Sale_Month", F.date_format("Date", "yyyy-MM"))
+    _write_months(fact, f"{out_dir}/{name}", dynamic=False)
 
 
 def write_star(
@@ -45,23 +54,12 @@ def write_star(
 
 def backfill_months(fact_delta: DataFrame, out_dir: str, name: str = "Fact_Sales") -> None:
     """Incremental month backfill: replace ONLY the partitions present in
-    the delta (spark.sql.sources.partitionOverwriteMode=dynamic), leaving
-    every other month untouched — the idempotent-rerun answer to the ref's
-    duplicate-on-rerun append (etl/loader.py:79; SURVEY.md §3.3.4). At
-    100 TB a daily rerun rewrites one month, not the table."""
-    spark = fact_delta.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            fact_delta.withColumn("Sale_Month", F.date_format("Date", "yyyy-MM"))
-            .repartition("Sale_Month")
-            .write.mode("overwrite")
-            .partitionBy("Sale_Month")
-            .parquet(f"{out_dir}/{name}")
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    the delta (dynamic partition overwrite), leaving every other month
+    untouched — the idempotent-rerun answer to the ref's duplicate-on-rerun
+    append (etl/loader.py:79; SURVEY.md §3.3.4). At 100 TB a daily rerun
+    rewrites one month, not the table."""
+    delta = fact_delta.withColumn("Sale_Month", F.date_format("Date", "yyyy-MM"))
+    _write_months(delta, f"{out_dir}/{name}", dynamic=True)
 
 
 def read_star(spark: SparkSession, out_dir: str) -> dict[str, DataFrame]:
@@ -188,18 +186,7 @@ def merge_by_key(
             )
     existing = fact.filter(month_pred)
     kept = existing.join(F.broadcast(keys), key, "left_anti").localCheckpoint(eager=True)
-    merged = kept.unionByName(delta)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            merged.repartition("Sale_Month")
-            .write.mode("overwrite")
-            .partitionBy("Sale_Month")
-            .parquet(f"{out_dir}/{name}")
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    _write_months(kept.unionByName(delta), f"{out_dir}/{name}", dynamic=True)
 
 
 def compact_partitions(
@@ -238,22 +225,12 @@ def compact_partitions(
             return 0
         return fs.getContentSummary(p).getLength()
 
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        for m in month_vals:
-            part = fact.filter(
-                F.col("Sale_Month").eqNullSafe(F.lit(m))
-            ).localCheckpoint(eager=True)
-            n_files = max(1, math.ceil(_partition_bytes(m) / target_file_bytes))
-            (
-                part.repartition(n_files)
-                .write.mode("overwrite")
-                .partitionBy("Sale_Month")
-                .parquet(f"{out_dir}/{name}")
-            )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    for m in month_vals:
+        part = fact.filter(
+            F.col("Sale_Month").eqNullSafe(F.lit(m))
+        ).localCheckpoint(eager=True)
+        n_files = max(1, math.ceil(_partition_bytes(m) / target_file_bytes))
+        _write_months(part, f"{out_dir}/{name}", dynamic=True, n_files=n_files)
 
 
 def mirror_to_jdbc(

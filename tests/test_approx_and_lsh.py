@@ -3,6 +3,7 @@ approximate aggregates vs exact values, and cosine-LSH bucket sanity."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as contract
@@ -41,6 +42,40 @@ def test_pq_rerank_recall(spark, sf_dir):
     pq1 = {r["query_id"]: r["neighbor_id"] for r in pq if r["rank"] == 1}
     agree = sum(1 for q in exact1 if pq1.get(q) == exact1[q])
     assert agree / len(exact1) >= 0.6
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q_similarity_topk",
+        "q_similarity_ivf",
+        "q_similarity_topk_np",
+        "q_similarity_ivf_kmeans",
+        "q_similarity_pq",
+    ],
+)
+def test_topk_variant_scores_equal_brute_force(spark, sf_dir, name):
+    """Whatever a variant's candidate generator prunes, every row it returns
+    carries exactly the brute-force score of its pair: the per-pair
+    dot/(norm·norm) over all probe × corpus pairs, rounded to 6 decimals.
+    pq and ivf_kmeans are otherwise checked only for recall and cells."""
+    from finegourmet_spark.operators.similarity import N_QUERIES, dot, norm
+    from finegourmet_spark.sources.testdata import load_table
+
+    e = load_table(spark, sf_dir, "embeddings")
+    q = e.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("a")
+    )
+    n = e.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("b"))
+    a, b = F.col("a"), F.col("b")
+    brute = q.crossJoin(n).select(
+        "query_id", "neighbor_id", F.round(dot(a, b) / (norm(a) * norm(b)), 6).alias("exact")
+    )
+    exact = {(r["query_id"], r["neighbor_id"]): r["exact"] for r in brute.collect()}
+    got = QUERIES[name](spark, sf_dir).collect()
+    assert got
+    mismatches = [r for r in got if r["cos_sim"] != exact[(r["query_id"], r["neighbor_id"])]]
+    assert mismatches == []
 
 
 def test_hll_rollup_estimates_match_exact(spark, sf_dir):

@@ -23,7 +23,9 @@ listed below was audited against that policy; they fall into five shapes:
                                 stats, ``qdf`` query-term dfreq)
   * per-batch key sets        — MERGE/CDC incremental batches, bounded by
                                 batch size not table size (``keys``,
-                                ``cdc.filter``, ``probes_df``, ``q``)
+                                ``cdc.filter``); the similarity probe set
+                                (``probe_df``), bounded by N_QUERIES or
+                                KNN_N_TEST rows
 
 This test fails on ANY new ``F.broadcast(`` site (or a removed one) so a
 hint on an sf-scaling frame cannot ship unreviewed: prove the new frame is
@@ -50,7 +52,7 @@ ALLOWED = {
         "bands", "cdc.filter", "n", "n", "n", "n", "n", "pick", "r", "r",
         "r", "surv", "target", "tot",
     ],
-    "operators/similarity.py": ["probes_df", "q", "q", "q", "q", "q"],
+    "operators/similarity.py": ["probe_df"],
     "operators/temporal.py": ["days", "den", "ks", "n_days"],
     "operators/textops.py": [
         "cand", "n_docs", "n_tot", "nd", "qdf", "scal", "tot", "v",

@@ -491,7 +491,7 @@ def test_shuffle_scratch_probe_returns_bytes(spark):
     """The grace-pass cleaner poll reads the block-manager local dirs; the
     probe must return a non-negative byte count on a live local session
     (None would silently degrade every pass wait to the fixed fallback)."""
-    from finegourmet_spark.operators.graph import _shuffle_scratch_bytes
+    from finegourmet_spark.operators.scratch import shuffle_scratch_bytes
 
-    n = _shuffle_scratch_bytes(spark)
+    n = shuffle_scratch_bytes(spark)
     assert n is not None and n >= 0

@@ -25,7 +25,7 @@ import sys
 import time
 
 import __spark_entry__ as contract
-from finegourmet_spark.operators.graph import _shuffle_scratch_bytes
+from finegourmet_spark.operators.scratch import shuffle_scratch_bytes
 from finegourmet_spark.session import get_spark
 
 # SPARK_GRAFT_MUT_DIR points the same protocol at another decade's
@@ -67,7 +67,7 @@ def main() -> int:
             try:
                 n = q[name](spark, SF10_MUT).count()
                 dt = time.time() - t0
-                scratch = _shuffle_scratch_bytes(spark)
+                scratch = shuffle_scratch_bytes(spark)
                 gb = f"{scratch / 2**30:.1f}" if scratch is not None else "?"
                 print(f"{name}: {n} rows in {dt:.1f}s (scratch now {gb} GB)",
                       flush=True)
