@@ -668,14 +668,14 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 64-fold expression tree also paid real planning time each build.
     The Arrow form moves BOTH terms the right way (the r13 dot()-unroll
     experiment moved them opposite ways and was rejected): measured
-    rebuild-per-run A/B in the docstring ledger (tools/simhash_ab.py,
-    exact-equality-gated). Signature values are bit-identical to the old
-    fold by construction: 2·popcount_j > n ⇔ vote_j > 0, and the
-    uint64 assembly reproduces the shiftleft/bitwiseOR fold including
-    bit 63 (sign bit) — pinned by tests/test_llm_ops.py's
-    reference-equality test. Only (doc_id, hashes) cross the boundary
-    (§4.1 — project before the opaque op); xxhash64 tokenization stays
-    JVM-side; the bucket-count window stays JVM-side after.
+    rebuild-per-run A/B in OPTIMIZATION_r14.md (exact-equality-gated).
+    Signature values are bit-identical to the old fold by construction:
+    2·popcount_j > n ⇔ vote_j > 0, and the uint64 assembly reproduces
+    the shiftleft/bitwiseOR fold including bit 63 (sign bit) — pinned by
+    tests/test_llm_ops.py's reference-equality test. Only (doc_id, hashes)
+    cross the boundary (§4.1 — project before the opaque op); xxhash64
+    tokenization stays JVM-side; the bucket-count window stays JVM-side
+    after.
     Session-conf independent (no arithmetic that can ANSI-overflow:
     numpy uint64 domain)."""
     d = spread(t(spark, sf_dir, "documents")).select(

@@ -45,29 +45,6 @@ PR_INIT = 1_000_000
 PR_BASE = 150_000  # 0.15 · PR_INIT, the damping complement
 PR_TOPN = 20
 
-# The iterated/grace-pass ops execute their heavy plan EAGERLY (so the
-# pinned DISK_ONLY frames can be released before returning — ADVICE r8)
-# and hand back a metadata-scale literal frame, which makes the returned
-# plan useless as scale-review evidence. When SPARK_GRAFT_RECORD_PLANS is
-# set (tools/dump_plans.py sets it), each op records the formatted plan
-# of its interior exchange here, keyed by query name.
-INTERIOR_PLANS: dict[str, str] = {}
-_RECORD_PLANS_ENV = "SPARK_GRAFT_RECORD_PLANS"
-
-
-def _record_interior(name: str, df: DataFrame) -> None:
-    import os
-
-    if not os.environ.get(_RECORD_PLANS_ENV):
-        return
-    try:
-        jvm = df.sparkSession.sparkContext._jvm  # noqa: SLF001
-        INTERIOR_PLANS[name] = jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"  # noqa: SLF001
-        )
-    except Exception:
-        pass  # plan evidence is best-effort; never fail the query for it
-
 _EDGE_SQL = """
     op AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
     edges AS (
@@ -162,8 +139,8 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     un-finalized AdaptiveSparkPlan reports UnknownPartitioning, so round
     0 (the only round compiled before the cache's first action) planned
     an ENSURE_REQUIREMENTS re-exchange + re-sort of every edge row on
-    top of the pinned scan (the r9 recorded plan, PLANS.md Exchange(25)/
-    Sort(26)). Once the cache is final, the scan exposes
+    top of the pinned scan (seen in the r9 formatted plan of the first
+    round). Once the cache is final, the scan exposes
     hashpartitioning(src, parts) + src-ordering and every round's
     mass⋈edge join is the promised pure streaming merge-join against the
     pinned blocks — no re-exchange, no per-task sort of edge rows; the
@@ -207,7 +184,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ej.count()
     try:
         mass = deg.select("src", F.lit(PR_INIT).cast("long").alias("mass"))
-        for rnd in range(PR_ROUNDS):
+        for _ in range(PR_ROUNDS):
             contrib = (
                 mass.join(deg, "src")  # node ⋈ node, broadcast-scale
                 .select("src", F.expr("mass div d").alias("c"))
@@ -225,8 +202,6 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 .select(F.col("dst").alias("src"), "mass")
             )
-            if rnd == 0:
-                _record_interior("q_graph_pagerank", nxt)
             mass = nxt.localCheckpoint()  # node-scale pin, flat lineage
         top_rows = (
             mass.orderBy(F.col("mass").desc(), F.col("src"))
@@ -402,9 +377,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_nodes_val = int(deg.count())
         n_edges_val = int(oriented.count())
         if passes == 1:
-            cc = _closure_count(wedges, closer, parts)
-            _record_interior("q_graph_triangles", cc)
-            n_tri_val = int(cc.first()[0])
+            n_tri_val = int(_closure_count(wedges, closer, parts).first()[0])
         else:
             # grace-partitioned closure (see docstring): slice BOTH sides
             # by the same (b, c) hash so each pass is a complete equi-join
@@ -812,12 +785,9 @@ def _jaccard_topk(
     # longer references the pins.
     try:
         if passes == 1:
-            plan = _slice_jac(None, None, parts).orderBy(*order).limit(JACC_TOPN)
-            _record_interior(
-                "q_graph_jaccard_capped" if hub_cap else "q_graph_jaccard_neighbors",
-                plan,
+            winners = (
+                _slice_jac(None, None, parts).orderBy(*order).limit(JACC_TOPN).collect()
             )
-            winners = plan.collect()
         else:
             p = _evidence_partitions(int(n_wedges) // passes, base_parts)
             winners = []

@@ -61,8 +61,10 @@ def q_udf_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import udf
     from pyspark.sql.types import StringType
 
+    # no type hints: PySpark 4 reads them to infer an Arrow eval type and
+    # warns when a row-at-a-time @udf carries them
     @udf(StringType())
-    def len_bucket_udf(text: str | None) -> str | None:
+    def len_bucket_udf(text):
         if text is None:
             return None
         n = len(text)

@@ -30,6 +30,10 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# scratch_pressure fires when dead shuffle files exceed this share of the
+# scratch volume's reclaimable headroom (free + dead scratch).
+RELEASE_FRAC = 0.15
+
 
 def shuffle_scratch_bytes(spark: SparkSession) -> int | None:
     """Current on-disk bytes of SHUFFLE files under the block manager's
@@ -73,22 +77,10 @@ def scratch_pressure(spark: SparkSession, scratch_bytes: int) -> bool:
     multi-TB scratch host would pay the poll on every call for noise.
     Gate instead on the RECLAIM RATIO: releasing buys back
     ``scratch_bytes`` of the volume's headroom, so fire when the dead
-    files exceed SPARK_GRAFT_SCRATCH_RELEASE_FRAC (default 0.15) of
-    (free + scratch) — os.statvfs on the first block-manager dir (local
-    dirs share one volume in local mode; on a cluster each executor
-    probes its own). Falls back to the old absolute gate if statvfs is
-    unavailable. The env override is clamped to (0, 1] (ADVICE r12:
-    0/negative made every barrier pay the poll, and NaN — whose
-    comparisons are all false — silently disabled the gate instead of
-    falling back)."""
-    try:
-        frac = float(
-            os.environ.get("SPARK_GRAFT_SCRATCH_RELEASE_FRAC", "0.15")
-        )
-    except ValueError:
-        frac = 0.15
-    if not (0 < frac <= 1):  # also catches NaN: every comparison is false
-        frac = 0.15
+    files exceed RELEASE_FRAC of (free + scratch) — os.statvfs on the
+    first block-manager dir (local dirs share one volume in local mode; on
+    a cluster each executor probes its own). Falls back to the old
+    absolute gate if statvfs is unavailable."""
     try:
         jdirs = (
             spark.sparkContext._jvm.org.apache.spark.SparkEnv.get()  # noqa: SLF001
@@ -100,7 +92,7 @@ def scratch_pressure(spark: SparkSession, scratch_bytes: int) -> bool:
         free = st.f_bavail * st.f_frsize
     except Exception:
         return scratch_bytes > 8 * 2**30
-    return scratch_bytes > frac * (free + scratch_bytes)
+    return scratch_bytes > RELEASE_FRAC * (free + scratch_bytes)
 
 
 def release_pass_shuffles(spark: SparkSession) -> None:

@@ -183,39 +183,51 @@ def test_triangles_matches_python_model(spark, sf_dir):
     assert row["closure_ppm"] == (3000000 * n_tri) // n_wedges
 
 
+def _forced_passes(monkeypatch, budget_gb: str) -> list[int]:
+    """Set the grace scratch budget and record every pass count the graph
+    ops choose under it."""
+    from finegourmet_spark.operators import graph
+
+    chosen: list[int] = []
+    real = graph._closure_passes
+
+    def spy(*args):
+        chosen.append(real(*args))
+        return chosen[-1]
+
+    monkeypatch.setattr(graph, "_closure_passes", spy)
+    monkeypatch.setenv(graph._CLOSURE_SCRATCH_ENV, budget_gb)
+    return chosen
+
+
 def test_jaccard_grace_partitioned_slices_equal(spark, sf_dir, monkeypatch):
-    """Forcing the scratch-bounded pair-evidence exchange (tiny budget →
-    several xxhash64(u, v) slices) reproduces both Jaccard forms exactly:
+    """Forcing the scratch-bounded pair-evidence exchange (small budget →
+    a few xxhash64(u, v) slices) reproduces both Jaccard forms exactly:
     each pair lives in one slice, so the union of per-slice top-k IS the
     global top-k."""
-    from finegourmet_spark.operators.graph import _CLOSURE_SCRATCH_ENV
-
     exact = QUERIES["q_graph_jaccard_neighbors"](spark, sf_dir).collect()
     capped = QUERIES["q_graph_jaccard_capped"](spark, sf_dir).collect()
-    monkeypatch.setenv(_CLOSURE_SCRATCH_ENV, "0.0001")
+    # sf0.001: 801,656 exact and 225,600 capped pair rows x 25 B; a 5 MB
+    # budget gives 4 and 2 passes (each pass waits ~2 s for the cleaner)
+    passes = _forced_passes(monkeypatch, "0.005")
     exact_f = QUERIES["q_graph_jaccard_neighbors"](spark, sf_dir).collect()
     capped_f = QUERIES["q_graph_jaccard_capped"](spark, sf_dir).collect()
+    assert len(passes) == 2 and all(2 <= k <= 4 for k in passes), passes
     assert [r.asDict() for r in exact_f] == [r.asDict() for r in exact]
     assert [r.asDict() for r in capped_f] == [r.asDict() for r in capped]
 
 
 def test_triangles_grace_partitioned_closure_equal(spark, sf_dir, monkeypatch):
-    """Forcing the scratch-bounded closure (a tiny budget → several
+    """Forcing the scratch-bounded closure (a small budget → a few
     xxhash64(b, c) slices) reproduces the single-pass census exactly —
     the slices partition the wedge set, so the per-pass counts must sum
     to the one-pass total (the q_geo_nearest_grid forced-multilevel
     pinning pattern)."""
-    from finegourmet_spark.operators.graph import (
-        _CLOSURE_SCRATCH_ENV,
-        _closure_passes,
-    )
-
     one_pass = QUERIES["q_graph_triangles"](spark, sf_dir).collect()[0]
-    # tiny budget: sf0.001 has ~10k wedges -> 19 B each -> ~190 KB; 1e-4 GB
-    # (~107 KB) forces >= 2 passes
-    monkeypatch.setenv(_CLOSURE_SCRATCH_ENV, "0.0001")
-    assert _closure_passes(one_pass["n_wedges"]) >= 2
+    # sf0.001: 234,314 wedges x 19 B; a 2 MB budget gives 3 passes
+    passes = _forced_passes(monkeypatch, "0.002")
     forced = QUERIES["q_graph_triangles"](spark, sf_dir).collect()[0]
+    assert len(passes) == 1 and 2 <= passes[0] <= 4, passes
     assert forced.asDict() == one_pass.asDict()
 
 
