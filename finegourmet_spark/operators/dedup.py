@@ -71,27 +71,32 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def shingle_seq(col: F.Column, n: int = 3) -> F.Column:
     """POSITIONAL word n-gram shingles of a document (duplicates kept, in
     token order), as an array<string> — element i is the shingle starting at
-    token i. Winnowing/LM operators need the sequence; set-based dedup uses
-    ``shingles`` (the distinct projection of this).
+    token i of ``split(col, ' ')``. Winnowing/LM operators need the
+    sequence; set-based dedup uses ``shingles`` (the distinct projection of
+    this).
 
-    Built from collection-level zip_with + slice (JVM-side, no UDF): shingle
-    i = tokens[i] ⊕ tokens[i+1] ⊕ … ⊕ tokens[i+n-1], produced by folding
-    zip_with over shifted slices of the token array.
+    One regexp_extract_all, no lambda: since the tokens are the text split
+    on single spaces, shingle i is a substring of the text. The pattern
+    matches zero-width at every token start (``^`` or just after a space)
+    and captures the next n tokens in a lookahead; a start with fewer than
+    n tokens left fails the lookahead and yields nothing, as the trailing
+    incomplete shingles of the split form did.
 
-    Why not transform(sequence, i -> element_at(toks, i+j))? Lambda bodies
-    are re-evaluated per element with no subexpression hoisting, so `toks`
-    (a split of the whole text) would be recomputed 3× per *shingle* —
-    quadratic in document length (measured 4.5 s → 0.3 s at sf0.1 for this
-    formulation). zip_with/slice reference the token array at collection
-    level: split runs O(n) times per *row*."""
-    toks = F.split(col, " ")
-    acc = toks
-    for j in range(1, n):
-        # zip pads the shorter side with null; concat null-propagates, so
-        # incomplete trailing shingles become null and are filtered below
-        shifted = F.slice(toks, j + 1, F.greatest(F.size(toks) - j, F.lit(0)))
-        acc = F.zip_with(acc, shifted, lambda a, b: F.concat(a, F.lit(" "), b))
-    return F.filter(acc, lambda x: x.isNotNull())
+    Why not lambdas? Catalyst's higher-order functions are CodegenFallback:
+    the old zip_with-over-shifted-slices fold evaluated each element in the
+    interpreter (n-1 concat lambdas plus a null filter per element).
+    Building and exploding the distinct 3-shingles of the 5,000-document
+    benchmark corpus took 0.55 s that way against 0.35 s for the regex
+    (warm medians of 5, local[2] on a 4-core VM). (transform over a
+    sequence was worse still: it re-splits the text per shingle.)
+
+    The lookbehind is ``(?<= )``, not the equivalent-looking
+    ``(?<![^ ])``: after a zero-width match the matcher advances one UTF-16
+    unit, and between the halves of a surrogate pair (an emoji) the
+    negative form matched and produced a bogus '?' shingle."""
+    return F.regexp_extract_all(
+        col, F.lit(f"(?:^|(?<= ))(?=([^ ]*(?: [^ ]*){{{n - 1}}}))"), 1
+    )
 
 
 def shingles(col: F.Column, n: int = 3) -> F.Column:

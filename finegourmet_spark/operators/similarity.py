@@ -8,16 +8,24 @@ join co-partitions both sides on the bucket key, turning O(N²) into
 O(N²/buckets) with no broadcast of the corpus.
 
 Every exact top-k variant shares one core and keeps only its candidate
-generator (all pairs, same label, k-means cell, GEMM-pruned superset, PQ
-shortlist, held-out split): ``probes`` builds the probe set with its norm,
-``scored_pairs`` is the one broadcast of that set plus the rounded cosine,
-and ``top_k`` is the deterministic rank filter.
+generator (same label, k-means cell, PQ shortlist, held-out split):
+``probes`` builds the probe set with its norm, ``scored_pairs`` is the one
+broadcast of that set plus the rounded cosine, and ``top_k`` is the
+deterministic rank filter. The all-pairs baseline and its GEMM-pruned twin
+need no join: ``streamed_top_k`` scores the collected probes inside one
+Arrow pass over the corpus and hands ``cos_sim`` and ``top_k`` the
+survivors.
 
-Dot products are JVM-side (`zip_with` + `aggregate` fold, element order
-fixed) — no Python in the O(N·k) path. Scores are rounded to 6 decimals
-*before* ranking so rank boundaries are stable across engines/partitionings
-(FP dot products agree to ~1e-12 relative; ranking on the rounded value with
-a vec_id tie-break makes top-k deterministic).
+Dot products are one sequential fold in doubles, element order fixed:
+``dot()`` (`zip_with` + `aggregate`) in the candidate-join variants (ivf,
+ivf_kmeans, pq, knn), and ``_fold`` — the same IEEE operations in the same
+order, one dimension at a time across rows in numpy — inside the
+corpus-streaming Arrow pass of ``q_similarity_topk`` and ``_np``, where the
+vectors already are, so no interpreted lambda runs per probe×corpus pair.
+Either way ``sqrt``, the division and the rounding stay JVM-side. Scores
+are rounded to 6 decimals *before* ranking so rank boundaries are stable
+across engines/partitionings (ranking on the rounded value with a vec_id
+tie-break makes top-k deterministic).
 """
 
 from __future__ import annotations
@@ -49,7 +57,12 @@ def dot(a: Column, b: Column) -> Column:
     scales with the expression tree; execution cost with the data — at
     bench scale planning dominates, and at 100 TB scale the brute-force
     baseline is not the route anyway (q_similarity_topk_np GEMM / IVF /
-    PQ are). The fold stays. (OPTIMIZATION_r13.md §q_similarity_topk.)"""
+    PQ are). The fold stays. (OPTIMIZATION_r13.md §q_similarity_topk.)
+
+    It scores the candidate-join variants (ivf, ivf_kmeans, pq re-rank,
+    q_knn_classify, q_dedup_embedding) and the embedding audit, and is the
+    test reference for ``_fold``, which replaced it in the streaming
+    brute-force pass of q_similarity_topk and _np."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
@@ -82,10 +95,14 @@ def scored_pairs(
     dot/(qnorm·enorm) is the oracles' per-pair IEEE expression, bit for bit."""
     return candidates.join(F.broadcast(probe_df), on).select(
         *keep,
-        F.round(
-            dot(F.col("qe"), F.col("embedding")) / (F.col("qnorm") * F.col("enorm")), 6
-        ).alias("cos_sim"),
+        cos_sim(dot(F.col("qe"), F.col("embedding")), F.col("qnorm"), F.col("enorm")),
     )
+
+
+def cos_sim(qe_dot: Column, qnorm: Column, enorm: Column) -> Column:
+    """``round(dot / (qnorm·enorm), 6)`` as ``cos_sim``: JVM-side, so null,
+    zero-divisor and ANSI behaviour are Spark's whoever computed the dot."""
+    return F.round(qe_dot / (qnorm * enorm), 6).alias("cos_sim")
 
 
 def top_k(
@@ -95,6 +112,144 @@ def top_k(
     breaking ties, numbered in ``rank``."""
     w = Window.partitionBy("query_id").orderBy(F.col(score).desc(), F.col("neighbor_id"))
     return df.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
+
+
+# Candidate-keep slack, in cosine units, of every per-batch prune. A pair
+# whose 6-decimal score ties-or-beats that of the batch's k-th raw score is
+# within 1e-6 of it (rounding is monotone), and BLAS pairwise summation vs
+# the sequential fold drifts by < 1e-9 on 64-dim vectors; 2 ppm covers both,
+# so the JVM rank sees a superset of the true global top-k.
+GEMM_PRUNE_SLACK = 2e-6
+
+
+def _fold(a: "np.ndarray", b: "np.ndarray") -> "np.ndarray":  # noqa: F821
+    """Σ_d a[d]·b[d] over the LEADING axis (dimension-first operands that
+    broadcast), one dimension at a time in float64: the IEEE operations of
+    ``dot()``'s aggregate(zip_with) fold in its order, so bit-identical."""
+    import numpy as np
+
+    acc = np.zeros(np.broadcast_shapes(a.shape[1:], b.shape[1:]))
+    for d in range(a.shape[0]):
+        acc += a[d] * b[d]
+    return acc
+
+
+def _near_top(scores: "np.ndarray", eligible: "np.ndarray") -> "np.ndarray":  # noqa: F821
+    """(probes, rows) mask: the ``eligible`` pairs scoring within
+    GEMM_PRUNE_SLACK of their probe's TOP_K-th best eligible score. A NaN
+    score means "not comparable" (null fold, zero divisor, NaN data): it
+    never sets the boundary and is never pruned."""
+    import numpy as np
+
+    keep = eligible.copy()
+    for p in range(len(scores)):
+        s = scores[p][eligible[p] & ~np.isnan(scores[p])]
+        if s.size > TOP_K:
+            keep[p] &= ~(scores[p] < np.partition(s, -TOP_K)[-TOP_K] - GEMM_PRUNE_SLACK)
+    return keep
+
+
+def _fold_batch(rb, qids, qvecs, qq, gemm: bool):
+    """One corpus Arrow batch (vec_id, embedding) → the pairs that can reach
+    a probe's top-k, with their folds ``dqe`` = dot(q, e), ``qq`` = dot(q,
+    q) and ``ee`` = dot(e, e). A null array, a null element or a length
+    mismatch gives a null fold, as zip_with does; such pairs are never
+    pruned, nor are zero divisors, so the JVM's null and ANSI behaviour
+    sees every row it would have seen. With ``gemm`` one float64 GEMM over
+    normalised vectors first picks the rows worth folding."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    ids_col, emb = rb.column(0), rb.column(1)
+    ids = ids_col.fill_null(0).to_numpy()
+    lens = pc.list_value_length(emb).fill_null(-1).to_numpy()
+    off = emb.offsets.to_numpy()
+    flat = emb.values
+    vals = flat.to_numpy(zero_copy_only=False).astype(np.float64)
+    nulls = np.concatenate([[0], np.cumsum(flat.is_null().to_numpy(zero_copy_only=False))])
+    clean = (lens >= 0) & (nulls[off[1:]] == nulls[off[:-1]])
+
+    n, qlen = len(ids), np.array([-1 if v is None else len(v) for v in qvecs], dtype=np.int64)
+    ee = np.full(n, np.nan)
+    dqe = np.full((len(qids), n), np.nan)
+    eligible = ids_col.is_valid().to_numpy(zero_copy_only=False)[None, :] & (
+        ids[None, :] != qids[:, None]
+    )
+    null_fold = np.ones_like(eligible)
+    with np.errstate(all="ignore"):
+        for L in np.unique(lens[clean]):
+            rows = np.flatnonzero(clean & (lens == L))
+            m = np.ascontiguousarray(vals[off[rows][:, None] + np.arange(L)].T)  # (L, rows)
+            ee[rows] = _fold(m, m)
+            qs = np.flatnonzero(qlen == L)
+            if not qs.size:
+                continue
+            q = np.stack([qvecs[i] for i in qs], axis=1)  # (L, probes)
+            block = np.ix_(qs, rows)
+            null_fold[block] = False
+            if gemm:
+                sims = (q / np.linalg.norm(q, axis=0)).T @ (m / np.linalg.norm(m, axis=0))
+                eligible[block] = _near_top(sims, eligible[block])
+                wanted = eligible[block].any(axis=0)
+                rows, m = rows[wanted], m[:, wanted]
+            dqe[np.ix_(qs, rows)] = _fold(q[:, :, None], m[:, None, :])
+        div = np.sqrt(qq)[:, None] * np.sqrt(ee)[None, :]
+        raw = np.where(div == 0, np.nan, dqe / div)
+    p, j = np.nonzero(_near_top(raw, eligible))
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(qids[p]),
+            pa.array(ids[j]),
+            pa.array(dqe[p, j], mask=null_fold[p, j]),
+            pa.array(qq[p], mask=qlen[p] < 0),
+            pa.array(ee[j], mask=~clean[j]),
+        ],
+        names=["query_id", "neighbor_id", "dqe", "qq", "ee"],
+    )
+
+
+def streamed_top_k(e: DataFrame, gemm: bool = False) -> DataFrame:
+    """Exact brute-force cosine top-k of the first N_QUERIES vectors in one
+    Arrow pass: the probe rows (metadata-scale) are collected and closed
+    over, the corpus streams through mapInArrow, and each batch folds every
+    probe×row pair with ``_fold`` and keeps the pairs within
+    GEMM_PRUNE_SLACK of the batch's k-th raw cosine. ``cos_sim`` and
+    ``top_k`` then run JVM-side on the survivors, so the result equals
+    ``top_k(scored_pairs(...))`` over all pairs, bit for bit.
+
+    mapInArrow, not mapInPandas: pandas turns a null array element into NaN
+    and a returned NaN into null, and the fold must tell them apart."""
+    import numpy as np
+
+    probe_rows = (
+        e.filter(F.col("vec_id") < N_QUERIES)
+        .select("vec_id", "embedding")
+        .collect()  # metadata-scale: N_QUERIES rows, not the corpus
+    )
+    qids = np.array([r["vec_id"] for r in probe_rows], dtype=np.int64)
+    qvecs = [
+        None
+        if r["embedding"] is None or None in r["embedding"]
+        else np.array(r["embedding"], dtype=np.float64)
+        for r in probe_rows
+    ]
+    qq = np.array([np.nan if v is None else _fold(v, v) for v in qvecs])
+
+    def fold_batches(batches):
+        for rb in batches:
+            yield _fold_batch(rb, qids, qvecs, qq, gemm)
+
+    folds = e.select("vec_id", "embedding").mapInArrow(
+        fold_batches, "query_id long, neighbor_id long, dqe double, qq double, ee double"
+    )
+    return top_k(
+        folds.select(
+            "query_id",
+            "neighbor_id",
+            cos_sim(F.col("dqe"), F.sqrt(F.col("qq")), F.sqrt(F.col("ee"))),
+        )
+    )
 
 
 # DuckDB twins (same sequential element order via list_transform + explicit fold)
@@ -127,15 +282,12 @@ def _sql_cosine(a: str, b: str) -> str:
     """,
 )
 def q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-k: broadcast the (small) probe set against the
-    corpus — one scan of the corpus, no corpus shuffle, per-partition partial
-    top-k via the rank window. This is the exact baseline an ANN variant
-    (q_similarity_ivf) is measured against."""
-    e = t(spark, sf_dir, "embeddings")
-    corpus = e.select("vec_id", "embedding", norm(F.col("embedding")).alias("enorm"))
-    q = probes(e, F.col("vec_id") < N_QUERIES)
-    on = F.col("vec_id") != F.col("query_id")
-    return top_k(scored_pairs(corpus, q, on, "query_id", F.col("vec_id").alias("neighbor_id")))
+    """Brute-force cosine top-k: the probe set (N_QUERIES rows) is collected
+    and the corpus streams once through ``streamed_top_k``'s Arrow pass —
+    no corpus shuffle, no broadcast, a per-batch partial top-k, and the
+    exact JVM rank on the survivors. This is the exact baseline an ANN
+    variant (q_similarity_ivf) is measured against."""
+    return streamed_top_k(t(spark, sf_dir, "embeddings"))
 
 
 @query(
@@ -248,79 +400,17 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("cos_sim") >= EMB_NEAR_THETA)
 
 
-# Candidate-keep slack for the GEMM pruner, in cosine units. BLAS pairwise
-# summation vs the sequential fold drift by < 1e-9 absolute on 64-dim unit
-# vectors; 2 ppm of slack guarantees any pair whose FOLD-rounded (6-decimal)
-# score ties-or-beats the batch's k-th score survives pruning, so the exact
-# JVM re-rank below sees a strict superset of the true global top-k.
-GEMM_PRUNE_SLACK = 2e-6
-
-
 @query("q_similarity_topk_np", oracle=ORACLES["q_similarity_topk"])
 def q_similarity_topk_np(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-k, Arrow/numpy fast path with exact re-rank:
-    the probe matrix (20×64 floats — metadata-scale) is collected once and
-    closed over; the corpus streams through mapInPandas in Arrow batches,
-    each batch scoring ALL probes with one float64 GEMM and emitting only a
-    per-batch top-k candidate SUPERSET per probe (partial top-k with 2 ppm
-    of keep-slack, embedding carried through); the ≤ (k+ties)·n_batches·
-    n_probes survivors are then re-scored JVM-side with the identical
-    sequential-fold expression the oracle uses and window-ranked. GEMM does
-    the O(N·d) work, the exact fold only touches the candidate set — so the
-    result is bit-identical to q_similarity_topk (now oracle-backed; was
-    rows-only until r4 because the pre-rewrite version RANKED on the BLAS
-    sums, whose pairwise summation order can flip a 6-decimal boundary)."""
-    import numpy as np
-    import pandas as pd
-
-    e = t(spark, sf_dir, "embeddings")
-    probe_rows = (
-        e.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()  # metadata-scale: N_QUERIES rows, not the corpus
-    )
-    out_schema = "query_id long, neighbor_id long, cos_sim double, rank int"
-    if not probe_rows:  # empty corpus ⇒ no probes ⇒ empty result, not a crash
-        return spark.createDataFrame([], out_schema)
-    probe_ids = np.array([r["vec_id"] for r in probe_rows], dtype=np.int64)
-    probe_mat = np.array([r["embedding"] for r in probe_rows], dtype=np.float64)
-    probe_mat /= np.linalg.norm(probe_mat, axis=1, keepdims=True)
-
-    cand_schema = "query_id long, neighbor_id long, embedding array<float>"
-
-    def prune_batches(batches):
-        for pdf in batches:
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            embs = pdf["embedding"]
-            mat = np.vstack(embs.to_numpy()).astype(np.float64)
-            mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-            sims = probe_mat @ mat.T  # (n_probes, batch)
-            for qi, qid in enumerate(probe_ids):
-                mask = ids != qid
-                cand_sims = sims[qi][mask]
-                if cand_sims.size == 0:
-                    continue
-                take = min(TOP_K, cand_sims.size)
-                # keep everything within slack of the batch's k-th raw score:
-                # covers 6-decimal ties AND gemm-vs-fold ulp drift, so no
-                # candidate the exact re-rank could surface is ever cut
-                boundary = np.partition(cand_sims, -take)[-take]
-                keep = cand_sims >= boundary - GEMM_PRUNE_SLACK
-                yield pd.DataFrame(
-                    {
-                        "query_id": qid,
-                        "neighbor_id": ids[mask][keep],
-                        "embedding": embs[mask][keep].reset_index(drop=True),
-                    }
-                )
-
-    candidates = e.select("vec_id", "embedding").mapInPandas(
-        prune_batches, cand_schema
-    )
-    # exact re-rank: the q_similarity_topk scorer over the pruned candidates only
-    candidates = candidates.withColumn("enorm", norm(F.col("embedding")))
-    q = probes(e, F.col("vec_id") < N_QUERIES)
-    return top_k(scored_pairs(candidates, q, "query_id", "query_id", "neighbor_id"))
+    """Brute-force cosine top-k, GEMM-pruned: ``streamed_top_k``'s one
+    Arrow pass, where each batch first scores ALL probes with one float64
+    GEMM over normalised vectors and only the rows within
+    GEMM_PRUNE_SLACK of a probe's batch k-th GEMM score go on to the exact
+    sequential fold. BLAS does the O(N·d) work, the fold only touches the
+    candidate set, and the result is bit-identical to q_similarity_topk
+    (oracle-backed; ranking on the BLAS sums themselves could flip a
+    6-decimal boundary, since pairwise summation changes the FP order)."""
+    return streamed_top_k(t(spark, sf_dir, "embeddings"), gemm=True)
 
 
 @query("q_similarity_ivf_kmeans")  # rows-only: trained centroids are engine-specific
