@@ -17,13 +17,14 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from finegourmet_spark.functions.partitioning import spread
 from finegourmet_spark.operators.registry import query
 from finegourmet_spark.operators.scratch import (
     phase_barrier as _phase_barrier,
+    release,
     release_if_pressured,
     sliced_exchange,
 )
@@ -288,32 +289,22 @@ def min_label_components(
     pair_cols: tuple[str, str] = ("doc_a", "doc_b"),
 ) -> DataFrame:
     """Connected components by iterative min-label propagation: per round,
-    every node takes min(own label, neighbors' labels). Labels only
-    decrease, so Σlabels is a strictly-decreasing convergence witness
-    costing one tiny agg per round (no extra join). Each round is one
+    every node takes min(own label, neighbors' labels). Each round is one
     equi-join + one hash-agg, lineage cut by an eager localCheckpoint (the
-    standard Spark iterative-algorithm pattern). Rounds needed = graph
-    diameter — tiny for near-dup clusters; adversarial diameters switch to
-    ``connected_components_alternating`` (O(log² n) rounds).
+    standard Spark iterative-algorithm pattern), and that checkpoint is the
+    round's only action: an ``Observation`` on the same frame counts the
+    nodes whose label dropped. Labels only decrease, so a round where none
+    dropped is the fixpoint; the count works for any orderable id type and
+    cannot overflow. Rounds needed ≤ graph diameter + 1 — tiny for the
+    near-dup, fuzzy-name and DBSCAN core graphs this serves.
 
     ``pairs``: one row per undirected edge. ``nodes``: one row per node
     (column ``id_col``; isolated nodes label themselves). Returns
-    (id_col, cluster_id) with cluster_id = the component's min node id.
+    (id_col, cluster_id) with cluster_id = the component's min node id,
+    backed by one pin (its blocks): each round releases the previous
+    round's labels, and the edge pin is released before returning.
     Raises after CC_MAX_ROUNDS non-converged rounds — the same bound the
     unrolled SQL oracle carries, keeping both sides exactly equivalent."""
-    import pyspark.sql.types as T
-
-    # The Σlabels convergence witness needs a SUMMABLE label type: string
-    # node ids sum to NULL, NULL == NULL reads as "converged", and
-    # propagation silently freezes after one round (caught by
-    # q_golden_record's first draft — 16 clusters vs the oracle's 8).
-    # Map non-numeric keys to integers first (min surrogate per key).
-    id_field = nodes.schema[id_col].dataType
-    if not isinstance(id_field, T.NumericType):
-        raise TypeError(
-            f"min_label_components: {id_col} must be numeric (got {id_field});"
-            " map string keys to integer ids first"
-        )
     a, b = pair_cols
     edges = pairs.select(F.col(a).alias("u"), F.col(b).alias("v")).unionAll(
         pairs.select(F.col(b).alias("u"), F.col(a).alias("v"))
@@ -332,33 +323,38 @@ def min_label_components(
     # At 100 TB per-executor scratch gets the same bound.
     release_if_pressured(pairs.sparkSession)
 
-    labels = nodes.select(id_col, F.col(id_col).alias("cluster_id")).localCheckpoint(
-        eager=True
-    )
-    prev_sum = labels.agg(F.sum("cluster_id")).collect()[0][0]
-    for _ in range(CC_MAX_ROUNDS):  # >= diameter of any real dup cluster
-        neigh = (
-            edges.join(labels, edges["v"] == labels[id_col])
-            .groupBy("u")
-            .agg(F.min("cluster_id").alias("nbr_min"))
-        )
-        labels = (
-            labels.join(neigh, labels[id_col] == neigh["u"], "left")
-            .select(
-                id_col,
-                F.least(
-                    F.col("cluster_id"), F.coalesce("nbr_min", "cluster_id")
-                ).alias("cluster_id"),
+    labels = nodes.select(id_col, F.col(id_col).alias("cluster_id"))
+    try:
+        for i in range(CC_MAX_ROUNDS):  # >= diameter of any real dup cluster
+            neigh = (
+                edges.join(labels, edges["v"] == labels[id_col])
+                .groupBy("u")
+                .agg(F.min("cluster_id").alias("nbr_min"))
             )
-            .localCheckpoint(eager=True)
-        )
-        cur_sum = labels.agg(F.sum("cluster_id")).collect()[0][0]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    else:
+            dropped = Observation()
+            nxt = (
+                labels.join(neigh, labels[id_col] == neigh["u"], "left")
+                .observe(
+                    dropped,
+                    F.count_if(F.col("nbr_min") < F.col("cluster_id")).alias("n"),
+                )
+                .select(
+                    id_col,
+                    F.least(
+                        F.col("cluster_id"), F.coalesce("nbr_min", "cluster_id")
+                    ).alias("cluster_id"),
+                )
+                .localCheckpoint(eager=True)
+            )
+            if i:
+                release(labels)  # round 1 reads ``nodes`` itself, no pin
+            labels = nxt
+            if dropped.get["n"] == 0:
+                return labels
+        release(labels)
         raise RuntimeError("min_label_components: label propagation did not converge")
-    return labels
+    finally:
+        release(edges)
 
 
 @query("q_dedup_clusters", oracle=_CC_ORACLE)
@@ -370,10 +366,9 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     is below threshold).
 
     Distributed shape: ``min_label_components`` (iterative min-label
-    propagation, localCheckpoint rounds, Σlabels convergence witness —
-    see there; a 100 TB deployment with adversarial chain lengths switches
-    to the large-star/small-star contraction, Kiveris et al., "Connected
-    Components in MapReduce and Beyond", SoCC'14)."""
+    propagation, one localCheckpoint action per round — see there). A
+    component with a node CC_MAX_ROUNDS hops from its minimum raises
+    rather than mislabel."""
     pairs = q_dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     docs = t(spark, sf_dir, "documents").select("doc_id")
     labels = min_label_components(pairs, docs, "doc_id")
@@ -385,91 +380,6 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cluster_id",
         F.count("*").over(wc).alias("cluster_size"),
         (F.col("doc_id") == F.col("cluster_id")).alias("is_survivor"),
-    )
-
-
-def connected_components_alternating(
-    edges: DataFrame, nodes: DataFrame, max_rounds: int = 20
-) -> DataFrame:
-    """Connected components by alternating large-star / small-star
-    contractions (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14) — converges in O(log² n) rounds REGARDLESS of graph
-    diameter, unlike plain min-label propagation's O(diameter). Use this
-    when components can be long chains (web graphs, citation chains); for
-    near-dup clusters (tiny diameter) min-label is cheaper per round.
-
-    large-star: every node connects its LARGER neighbors to its current
-    minimum neighbor (incl. itself); small-star: every node connects its
-    smaller-or-equal neighbors to its minimum. Each round is two
-    groupBy-min + join passes over the edge list; edges monotonically
-    point toward component minima until fixpoint.
-
-    ``edges``: columns (u, v), undirected (one direction suffices).
-    ``nodes``: column (id) — isolated nodes keep themselves as root.
-    Returns (id, component) where component = the component's min node id.
-    """
-    def _sym(df: DataFrame) -> DataFrame:
-        return df.unionAll(df.select(F.col("v").alias("u"), F.col("u").alias("v")))
-
-    def _large_star(df: DataFrame) -> DataFrame:
-        # per node u over its FULL neighborhood: m = min(Γ(u) ∪ {u});
-        # emit (w, m) for every strictly larger neighbor w
-        sym = _sym(df)
-        mins = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        return (
-            sym.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .distinct()
-        )
-
-    def _small_star(df: DataFrame) -> DataFrame:
-        # orient edges small→large so Γ(u) here = smaller neighbors; emit
-        # (w, m) for all of them plus (u, m)
-        oriented = _sym(df).filter(F.col("v") < F.col("u"))
-        mins = oriented.groupBy("u").agg(F.min("v").alias("m"))
-        joined = oriented.join(mins, "u")
-        return (
-            joined.select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionAll(mins.select("u", F.col("m").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    e = (
-        edges.select(F.col("u").cast("long").alias("u"), F.col("v").cast("long").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    def _witness(df: DataFrame):
-        # one tiny agg instead of two edge-set-sized exceptAll anti-joins
-        # (r2 review): (count, order-independent hash-sum) — distinct edge
-        # sets collide with probability ~2^-64 per round
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.xxhash64("u", "v")).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    prev_w = _witness(e)
-    for _ in range(max_rounds):
-        new_e = _small_star(_large_star(e)).localCheckpoint(eager=True)
-        w = _witness(new_e)
-        e = new_e
-        if w == prev_w:
-            break
-        prev_w = w
-    else:
-        raise RuntimeError("connected_components_alternating did not converge")
-    # at fixpoint every edge points node → component root (the minimum)
-    roots = _sym(e).filter(F.col("v") < F.col("u")).groupBy("u").agg(
-        F.min("v").alias("component")
-    )
-    nodes_t = nodes.select(F.col("id").cast("long").alias("id"))
-    return (
-        nodes_t.join(roots, nodes_t["id"] == roots["u"], "left")
-        .select("id", F.coalesce("component", F.col("id")).alias("component"))
     )
 
 
@@ -1424,13 +1334,12 @@ def q_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropDuplicates — the reference-bug class this repo exists to fix,
     etl/transform.py:296).
 
-    Names are mapped to INTEGER node ids (min p_partkey per name) before
-    the CC — the shared machinery's Σlabels convergence witness needs a
-    summable label type (string labels sum to NULL, which froze
-    propagation after one round in the first draft; caught by the
-    oracle's 8-vs-16 cluster count). Scale shape: the pair gate runs on
-    the name VOCABULARY (the fuzzy-join discipline), CC rounds are
-    vocabulary-scale joins, and the survivorship window runs per cluster.
+    Names are mapped to node ids (min p_partkey per name) before the CC
+    only because the oracle reports each cluster by its minimum
+    p_partkey; the CC itself labels string ids just as well. Scale
+    shape: the pair gate runs on the name VOCABULARY (the fuzzy-join
+    discipline), CC rounds are vocabulary-scale joins, and the
+    survivorship window runs per cluster.
     Oracle: the same unrolled min-label rounds as q_dedup_clusters over
     the name-id graph, wrapped with the survivorship window."""
     names = (

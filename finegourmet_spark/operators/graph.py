@@ -35,6 +35,7 @@ from pyspark.sql.window import Window
 from finegourmet_spark.operators.registry import query
 from finegourmet_spark.operators.scratch import (
     pass_log,
+    release,
     release_pass_shuffles,
     sliced_exchange,
 )
@@ -158,10 +159,11 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges, so each round shuffles only node-scale frames plus the
     map-side-combined contribution aggregate on dst; per-round masses are
     localCheckpointed (lineage would double per round otherwise, the CC
-    lesson, dedup.py:204). The final top-{PR_TOPN} is collected
-    (metadata-scale) so the pinned edge blocks are RELEASED before
-    returning (ADVICE r8), and the {PR_TOPN}-row rank window is
-    explicitly metadata-scale."""
+    lesson, dedup.min_label_components), each released once the next
+    round is built. The final top-{PR_TOPN} is collected
+    (metadata-scale) so the pinned edges, degrees and last mass are
+    RELEASED before returning (ADVICE r8), and the {PR_TOPN}-row
+    rank window is explicitly metadata-scale."""
     from pyspark import StorageLevel
 
     try:
@@ -182,6 +184,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (an unfinalized cached plan reports UnknownPartitioning and round 0
     # re-exchanges + re-sorts the whole edge list — VERDICT r9 item 2).
     ej.count()
+    pins = [deg]  # released on exit, once the top rows are collected
     try:
         mass = deg.select("src", F.lit(PR_INIT).cast("long").alias("mass"))
         for _ in range(PR_ROUNDS):
@@ -202,7 +205,13 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 .select(F.col("dst").alias("src"), "mass")
             )
-            mass = nxt.localCheckpoint()  # node-scale pin, flat lineage
+            # node-scale pin, flat lineage; building it runs every
+            # exchange that reads the previous round's pin (AQE
+            # materializes query stages first), so that pin is dead
+            mass = nxt.localCheckpoint()
+            if len(pins) > 1:
+                release(pins.pop())
+            pins.append(mass)
         top_rows = (
             mass.orderBy(F.col("mass").desc(), F.col("src"))
             .limit(PR_TOPN)
@@ -210,6 +219,8 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         ej.unpersist(blocking=False)
+        for pin in pins:
+            release(pin)
     top = (
         spark.createDataFrame(top_rows, "src bigint, mass bigint")
         .orderBy(F.col("mass").desc(), F.col("src"))
@@ -1052,15 +1063,31 @@ def q_item_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
       market-basket corpora the degree-1 tail is typically 40–60% of
       the catalog; on this uniform TPC-H fixture it is measured EMPTY
       (0 of 2M parts at sf10, avg degree 30), so the prune is gated on
-      a one-action probe and skipped when there is no tail (forceable
-      via SPARK_GRAFT_CF_FORCE_PRUNE=1 — the equality pytest runs both
-      paths). The probe doubles as the packed-key range guard.
+      a one-action probe and skipped when there is no tail
+      (``item_item_cf(force_prune=True)`` forces it — the equality
+      pytest runs both paths). The probe doubles as the packed-key
+      range guard.
     * PACKED pair key: the co-count exchange is the op's dominant term
       (~1.3e9 near-unique rows at sf10 — map-side combine can't help),
       so the unordered pair ships as ONE bigint (least<<32 | greatest)
       instead of two, halving the shuffled key bytes; decoded right
       after the agg. Falls back to the two-column key if max(pk) ≥
       2³¹ (TPC-H keys reach that around sf~10⁴ per scaling rules)."""
+    return item_item_cf(spark, sf_dir)
+
+
+def item_item_cf(
+    spark: SparkSession,
+    sf_dir: str,
+    *,
+    force_prune: bool = False,
+    pack_keys: bool = True,
+) -> DataFrame:
+    """``q_item_item_cf`` with its data-selected branches forceable, so
+    small fixtures exercise both sides: ``force_prune`` runs the
+    min-support anti-join even when the probe finds no tail;
+    ``pack_keys=False`` takes the two-column pair key that max(pk) ≥ 2³¹
+    selects."""
     from pyspark import StorageLevel
 
     from finegourmet_spark.operators.cellpairs import bounded_cell_self_join
@@ -1072,14 +1099,14 @@ def q_item_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("o_custkey").alias("u"), F.col("l_partkey").alias("pk"))
         .distinct()
         # consumed three times (pair self-join both sides, item counts) —
-        # pinned DISK_ONLY, not localCheckpoint: the checkpoint's default
-        # MEMORY_AND_DISK blocks held the data-scale (u, pk) frame in the
-        # unified pool and starved the pair agg's pages on the default
-        # 8 GB heap at sf10 (measured AGGREGATE_OUT_OF_MEMORY, r10);
-        # disk blocks keep the reuse without the memory squeeze.
-        .persist(StorageLevel.DISK_ONLY)
+        # pinned DISK_ONLY: the checkpoint's default MEMORY_AND_DISK
+        # blocks held the data-scale (u, pk) frame in the unified pool and
+        # starved the pair agg's pages on the default 8 GB heap at sf10
+        # (measured AGGREGATE_OUT_OF_MEMORY, r10); disk blocks keep the
+        # reuse without the memory squeeze. A checkpoint, not persist():
+        # no CacheManager entry for later builds in the session to pick up.
+        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
     )
-    up.count()  # materialize the pin before fan-out
     nu = up.groupBy("pk").agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n"))
     # ONE item-scale action answers both adaptive questions: is there a
     # sub-support degree tail to prune, and do part keys fit the packed
@@ -1089,11 +1116,9 @@ def q_item_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("pk").alias("max_pk"),
     ).first()
     n_tail = int(probe["tail"] or 0)
-    packable = int(probe["max_pk"] or 0) < (1 << 31) and (
-        os.environ.get("SPARK_GRAFT_CF_PACK_DISABLE") != "1"
-    )
+    packable = pack_keys and int(probe["max_pk"] or 0) < (1 << 31)
     cf_input = up
-    if n_tail or os.environ.get("SPARK_GRAFT_CF_FORCE_PRUNE") == "1":
+    if n_tail or force_prune:
         tail = nu.filter(F.col("n") < CF_MIN_CO).select("pk")
         # anti-join on the TAIL (≤ item-scale by construction; AQE
         # broadcasts it when small) — exact, see docstring

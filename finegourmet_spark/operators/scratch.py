@@ -176,6 +176,17 @@ def release_if_pressured(spark: SparkSession) -> None:
         release_pass_shuffles(spark)
 
 
+def release(df: DataFrame) -> None:
+    """Drop the blocks of a frame returned by ``localCheckpoint``: unpersist
+    the RDD behind its LogicalRDD leaf now, instead of leaving it in
+    ``getPersistentRDDs()`` until a JVM GC hands it to the ContextCleaner.
+    Only for pins whose consumers have all run (an iterative loop's
+    previous round once the next round has materialized, or any pin after
+    its result was collected): a checkpoint's lineage is cut, so nothing
+    can recompute the blocks."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)  # noqa: SLF001
+
+
 def phase_barrier(df: DataFrame) -> DataFrame:
     """Materialize a SMALL phase product (doc-scale: one row per doc, a
     few hundred bytes each — NEVER a shingle-exploded frame, that is the

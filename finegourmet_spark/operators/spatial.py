@@ -266,9 +266,7 @@ from finegourmet_spark.operators.dedup import (  # noqa: E402
 # continuum percolation says a supercritical eps (mean degree >> 4.5) fuses
 # everything into one giant cluster whose diameter exceeds CC_MAX_ROUNDS —
 # DBSCAN with such an eps is semantically meaningless anyway, and
-# min_label_components fails LOUD on it (swap in
-# connected_components_alternating for adversarial-diameter deployments,
-# exactly as q_dedup_clusters documents).
+# min_label_components fails LOUD on it.
 DBSCAN_EPS = 80
 DBSCAN_EPS2 = DBSCAN_EPS * DBSCAN_EPS
 DBSCAN_MINPTS = 4  # neighborhood size INCLUDING the point itself

@@ -195,7 +195,7 @@ def test_item_item_cf_hot_basket_invariant(spark, sf_dir, monkeypatch):
     assert base  # non-trivial result at sf0.001
 
 
-def test_item_item_cf_force_prune_invariant(spark, sf_dir, monkeypatch):
+def test_item_item_cf_force_prune_invariant(spark, sf_dir):
     """q_item_item_cf with the min-support pre-prune FORCED must equal the
     probe-gated default exactly (VERDICT r11 item 3): the prune drops only
     (u, pk) rows of parts whose degree is < CF_MIN_CO, which by
@@ -207,17 +207,15 @@ def test_item_item_cf_force_prune_invariant(spark, sf_dir, monkeypatch):
     key = lambda r: (r["part_a"], r["part_b"])  # noqa: E731
     base = {key(r): (r["co_users"], r["cos2_ppm"], r["rank"])
             for r in g.q_item_item_cf(spark, sf_dir).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_CF_FORCE_PRUNE", "1")
     forced = {key(r): (r["co_users"], r["cos2_ppm"], r["rank"])
-              for r in g.q_item_item_cf(spark, sf_dir).collect()}
+              for r in g.item_item_cf(spark, sf_dir, force_prune=True).collect()}
     assert base == forced
     assert base
 
 
-def test_item_item_cf_packed_key_fallback_invariant(spark, sf_dir,
-                                                    monkeypatch):
+def test_item_item_cf_packed_key_fallback_invariant(spark, sf_dir):
     """The packed single-bigint pair key and the two-column fallback must
-    agree exactly — SPARK_GRAFT_CF_PACK_DISABLE=1 forces the fallback
+    agree exactly — ``pack_keys=False`` forces the fallback
     branch that max(pk) ≥ 2³¹ would select, so the >sf10⁴ key-range path
     is exercised on small fixtures."""
     import finegourmet_spark.operators.graph as g
@@ -225,9 +223,8 @@ def test_item_item_cf_packed_key_fallback_invariant(spark, sf_dir,
     key = lambda r: (r["part_a"], r["part_b"])  # noqa: E731
     base = {key(r): (r["co_users"], r["cos2_ppm"], r["rank"])
             for r in g.q_item_item_cf(spark, sf_dir).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_CF_PACK_DISABLE", "1")
     unpacked = {key(r): (r["co_users"], r["cos2_ppm"], r["rank"])
-                for r in g.q_item_item_cf(spark, sf_dir).collect()}
+                for r in g.item_item_cf(spark, sf_dir, pack_keys=False).collect()}
     assert base == unpacked
     assert base
 

@@ -120,47 +120,6 @@ def test_dedup_clusters_transitive_chain(spark, corpus_dir):
     assert rows[4]["cluster_id"] == 4 and rows[4]["is_survivor"]
 
 
-def test_alternating_cc_matches_min_label_and_handles_chains(spark, sf_dir):
-    """large-star/small-star CC (O(log²n) rounds) agrees with the min-label
-    q_dedup_clusters components on the real near-dup graph, and collapses a
-    50-node chain — the diameter case min-label would need 50 rounds for."""
-    from pyspark.sql import functions as F
-
-    from finegourmet_spark.operators.dedup import connected_components_alternating
-
-    # chain + triangle + isolate
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(49)] + [(100, 101), (101, 102), (100, 102)],
-        "u long, v long",
-    )
-    nodes = spark.createDataFrame(
-        [(i,) for i in range(50)] + [(100,), (101,), (102,), (200,)], "id long"
-    )
-    out = {
-        r["id"]: r["component"]
-        for r in connected_components_alternating(chain, nodes).collect()
-    }
-    assert all(out[i] == 0 for i in range(50))
-    assert out[100] == out[101] == out[102] == 100 and out[200] == 200
-
-    # equivalence with the min-label path on the real near-dup pair graph
-    ml = {
-        r["doc_id"]: r["cluster_id"]
-        for r in QUERIES["q_dedup_clusters"](spark, sf_dir).collect()
-    }
-    pairs = QUERIES["q_dedup_ngram_jaccard"](spark, sf_dir).select(
-        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
-    )
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        F.col("doc_id").alias("id")
-    )
-    alt = {
-        r["id"]: r["component"]
-        for r in connected_components_alternating(pairs, docs).collect()
-    }
-    assert alt == ml
-
-
 def test_simhash_identical_docs_share_signature(spark, corpus_dir):
     sigs = {r["doc_id"]: r for r in QUERIES["q_dedup_simhash"](spark, corpus_dir).collect()}
     assert sigs[0]["simhash"] == sigs[2]["simhash"]
@@ -368,10 +327,17 @@ def test_multimodal_decoder_catches_orientation_and_channel_bugs():
     assert int(sums[2]) == w * h * 200
 
 
+def _chain(spark, n):
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
+    )
+    return edges, spark.range(n).withColumnRenamed("id", "doc_id")
+
+
 def test_min_label_raises_on_diameter_beyond_round_bound(spark):
     """min_label_components must FAIL LOUD (not return wrong labels) on a
-    graph whose diameter exceeds CC_MAX_ROUNDS — the same 50-chain the
-    alternating large-star/small-star variant handles in O(log² n)."""
+    graph it cannot settle in CC_MAX_ROUNDS rounds: a 16-node chain needs
+    15 label-changing rounds plus the round that sees no change."""
     import pytest as _pytest
 
     from finegourmet_spark.operators.dedup import (
@@ -379,10 +345,75 @@ def test_min_label_raises_on_diameter_beyond_round_bound(spark):
         min_label_components,
     )
 
-    n = CC_MAX_ROUNDS * 3 + 5  # diameter safely past the bound
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
-    )
-    nodes = spark.range(n).withColumnRenamed("id", "doc_id")
     with _pytest.raises(RuntimeError, match="did not converge"):
-        min_label_components(chain, nodes, "doc_id")
+        min_label_components(*_chain(spark, CC_MAX_ROUNDS + 1), "doc_id")
+
+
+def test_min_label_converges_at_round_bound(spark):
+    """The longest chain the loop settles is CC_MAX_ROUNDS nodes (14
+    changing rounds + the quiet one), the same graphs the oracle's 15
+    unrolled rounds label fully."""
+    from finegourmet_spark.operators.dedup import (
+        CC_MAX_ROUNDS,
+        min_label_components,
+    )
+
+    labels = min_label_components(*_chain(spark, CC_MAX_ROUNDS), "doc_id")
+    assert {r["cluster_id"] for r in labels.collect()} == {0}
+
+
+def test_min_label_ids_near_long_max_under_ansi(spark):
+    """Ids near 2^62 under ANSI: the convergence witness counts label
+    drops, so no sum over ids can overflow (a Σlabels witness raised
+    ARITHMETIC_OVERFLOW here)."""
+    from finegourmet_spark.operators.dedup import min_label_components
+
+    base = 1 << 62
+    edges = spark.createDataFrame(
+        [(base, base + 1), (base + 1, base + 2)], "doc_a long, doc_b long"
+    )
+    nodes = spark.createDataFrame(
+        [(base + i,) for i in range(4)], "doc_id long"
+    )
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        got = {
+            r["doc_id"]: r["cluster_id"]
+            for r in min_label_components(edges, nodes, "doc_id").collect()
+        }
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert got == {base: base, base + 1: base, base + 2: base, base + 3: base + 3}
+
+
+def test_min_label_leaves_only_the_returned_pin(spark):
+    """One call leaves exactly one new persistent RDD, the returned
+    labels': each round releases the previous round's pin and the edge pin
+    is released before returning. Compared as id sets, since the
+    ContextCleaner may reclaim older RDDs mid-call."""
+    from finegourmet_spark.operators.dedup import min_label_components
+
+    def persistent_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    edges, nodes = _chain(spark, 6)
+    before = persistent_ids()
+    labels = min_label_components(edges, nodes, "doc_id")
+    own = labels._jdf.queryExecution().analyzed().rdd().id()
+    assert persistent_ids() - before == {own}
+    assert {r["cluster_id"] for r in labels.collect()} == {0}
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["q_dedup_clusters", "q_golden_record", "q_dedup_semantic_clusters", "q_geo_dbscan"],
+)
+def test_cc_queries_rerun_equal(spark, sf_dir, name):
+    """Every CC query returns the same rows when run twice in one
+    session: released round pins are never read again."""
+    from collections import Counter
+
+    first = Counter(QUERIES[name](spark, sf_dir).collect())
+    assert first
+    assert Counter(QUERIES[name](spark, sf_dir).collect()) == first

@@ -4,11 +4,14 @@ synthetic fixtures reproducing the reference's anomaly taxonomy
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from finegourmet_spark.star.pipeline import run_pipeline
 from tests.fixtures_gen import write_fixtures
+from tests.test_reference_data_integration import REF_DATA
 
 
 @pytest.fixture(scope="module")
@@ -305,6 +308,9 @@ def test_observation_metrics_from_single_pass(spark, tmp_path_factory):
     assert m["n_null_prices"] == 0  # the "x" price was repaired
 
 
+@pytest.mark.skipif(
+    not os.path.isdir(REF_DATA), reason="reference data not available"
+)
 def test_star_scale_replicator_factor3(spark, tmp_path_factory):
     """tools/make_star_scale.py (the 1000x composed-run fixture generator)
     at factor 3: facts and clients scale exactly 3x the reference's real
@@ -336,10 +342,10 @@ def test_star_scale_replicator_factor3(spark, tmp_path_factory):
     n_clients = res.star["Dim_Client"].count()
     base = run_pipeline(
         spark,
-        sfcc_glob="/root/reference/data/salesforces/*_sfcc_sales.csv",
-        cegid_path="/root/reference/data/cegid/*.json",
-        products_glob="/root/reference/data/product/*_product_reference.csv",
-        boutiques_path="/root/reference/data/boutiques/2025_boutiques.csv",
+        sfcc_glob=f"{REF_DATA}/salesforces/*_sfcc_sales.csv",
+        cegid_path=f"{REF_DATA}/cegid/*.json",
+        products_glob=f"{REF_DATA}/product/*_product_reference.csv",
+        boutiques_path=f"{REF_DATA}/boutiques/2025_boutiques.csv",
     )
     n_base_clients = base.star["Dim_Client"].count()
     # clients with a NULL email collapse to one anonymous row across copies

@@ -141,11 +141,9 @@ def test_out_of_order_matches_python_model(spark, sf_dir):
 
 def test_golden_record_matches_python_model(spark, sf_dir):
     """q_golden_record: python union-find over the same fuzzy pair graph +
-    the same survivorship rule; also pins the min_label_components numeric
-    guard (string node ids must raise, not silently under-merge)."""
+    the same survivorship rule; also pins that min_label_components labels
+    string node ids exactly like their integer twins."""
     from collections import Counter
-
-    import pytest
 
     from finegourmet_spark.operators.dedup import (
         LEV_MAX,
@@ -196,14 +194,23 @@ def test_golden_record_matches_python_model(spark, sf_dir):
         for r in rows
     }
     assert got == expected
-    # the guard: string node ids must raise loudly
-    from pyspark.sql import functions as F
+    # string ids: zero-padded twins order like the integers, so the labels
+    # must map one to one (a Σlabels witness summed strings to NULL and
+    # froze after one round)
+    edges = [(1, 2), (2, 3), (3, 4), (7, 6), (9, 8)]
+    ids = range(1, 11)
 
-    strs = spark.createDataFrame([("a",), ("b",)], "k string")
-    with pytest.raises(TypeError, match="must be numeric"):
-        min_label_components(
-            strs.select(F.col("k").alias("x"), F.col("k").alias("y")),
-            strs,
+    def labels(typ, key):
+        out = min_label_components(
+            spark.createDataFrame([(key(a), key(b)) for a, b in edges], f"x {typ}, y {typ}"),
+            spark.createDataFrame([(key(i),) for i in ids], f"k {typ}"),
             "k",
             pair_cols=("x", "y"),
         )
+        return {r["k"]: r["cluster_id"] for r in out.collect()}
+
+    ints = labels("long", int)
+    assert labels("string", "{:03d}".format) == {
+        f"{k:03d}": f"{c:03d}" for k, c in ints.items()
+    }
+    assert len(set(ints.values())) == 5
