@@ -4,9 +4,14 @@ Jaccard, MinHash+LSH, SimHash.
 Scale design (the 100 TB story):
   * exact dedup = one hash-groupBy shuffle on a 16-byte digest (not the
     document text) — shuffle payload is keys + doc ids only;
-  * MinHash/LSH = per-doc signature (narrow map) → explode to (band, bucket)
-    → groupBy bucket → candidate pairs only ever meet inside a bucket —
-    no O(n²) comparison, and bucket skew is bounded by band width;
+  * MinHash/LSH = each distinct shingle hashed once in the JVM, then one
+    Arrow kernel takes every document's signature over its contiguous run
+    of shingle rows and emits (doc_id, band, bucket) — no shuffle before
+    the bucket self-join, where candidate pairs only ever meet inside a
+    bucket: no O(n²) comparison, and bucket skew is bounded by band width.
+    The kernel's values are the relational xxhash64 form's, bit for bit
+    (``XXH64.hashInt(i, xxhash64(s)) = xxhash64(s, lit(i))``; see
+    ``minhash_banded``), which requires doc_id to be the table's key;
   * SimHash = 64-bit signature per doc, near-dup = same signature (or
     Hamming-adjacent via rotate-and-bucket), again a key-only shuffle;
   * exact n-gram Jaccard verifies LSH candidates (the expensive check runs
@@ -388,49 +393,156 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 N_HASHES = 32
 N_BANDS = 8  # 4 rows per band
 
+# Spark's XXH64 (catalyst ``expressions.XXH64``): its primes and the int and
+# long steps ``xxhash64`` applies per column, in numpy's wrapping uint64
+# arithmetic. Spark's multi-column ``xxhash64(c1, c2, ...)`` seeds each
+# column's hash with the previous column's (the first with 42), so
+# ``xxhash64(s, lit(i)) = hashInt(i, xxhash64(s))`` and
+# ``xxhash64(lit(b), h1, h2) = hashLong(h2, hashLong(h1, hashInt(b, 42)))``.
+_P1, _P2, _P3, _P4, _P5 = (
+    0x9E3779B185EBCA87,
+    0xC2B2AE3D27D4EB4F,
+    0x165667B19E3779F9,
+    0x85EBCA77C2B2AE63,
+    0x27D4EB2F165667C5,
+)
+_XXH_SEED = 42
+
+
+def _rotl(x, r: int):
+    import numpy as np
+
+    return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
+
+
+def _xxh_finish(h, rot: int, mul: int, add: int):
+    """XXH64's last round (``rotl(h, rot) * mul + add``) and avalanche."""
+    import numpy as np
+
+    h = _rotl(h, rot) * np.uint64(mul) + np.uint64(add)
+    h ^= h >> np.uint64(33)
+    h *= np.uint64(_P2)
+    h ^= h >> np.uint64(29)
+    h *= np.uint64(_P3)
+    h ^= h >> np.uint64(32)
+    return h
+
+
+def _xxh_hash_int(i, seed):
+    """``XXH64.hashInt(i, seed)`` elementwise over broadcasting arrays: ``i``
+    ints, ``seed`` uint64."""
+    import numpy as np
+
+    k = (i.astype(np.uint64) & np.uint64(0xFFFFFFFF)) * np.uint64(_P1)
+    return _xxh_finish((seed + np.uint64(_P5 + 4)) ^ k, 23, _P2, _P3)
+
+
+def _xxh_hash_long(v, seed):
+    """``XXH64.hashLong(v, seed)`` elementwise over uint64 arrays."""
+    import numpy as np
+
+    k = _rotl(v * np.uint64(_P2), 31) * np.uint64(_P1)
+    return _xxh_finish((seed + np.uint64(_P5 + 8)) ^ k, 27, _P1, _P4)
+
+
+def _minhash_bands(batches, n_hashes: int, n_bands: int):
+    """Arrow batches of (doc_id, h = xxhash64(shingle)), each document's rows
+    contiguous → batches of (doc_id, band, bucket).
+
+    Signature row i of a document is the signed min over its shingles of
+    ``hashInt(i, h)`` (= ``xxhash64(shingle, lit(i))``); band b's bucket
+    chains ``hashLong`` over the band's rows from ``hashInt(b, 42)`` (=
+    ``xxhash64(lit(b), h_b0, h_b1, ...)``). A document's run may continue
+    into the next batch, so the last run of each batch stays open: only its
+    n_hashes partial mins are carried, never its rows, and the working set
+    is the batch's rows × n_hashes whatever the document's length.
+    Module-level so reused Python workers keep it importable."""
+    import numpy as np
+    import pyarrow as pa
+
+    rows = np.arange(n_hashes)
+    bands = np.arange(n_bands, dtype=np.int32)
+    band_seed = _xxh_hash_int(bands, np.full(n_bands, _XXH_SEED, dtype=np.uint64))
+
+    def banded(ids, mins):
+        sig = mins.view(np.uint64).reshape(len(ids), n_bands, -1)
+        bucket = np.broadcast_to(band_seed, sig.shape[:2])
+        for r in range(sig.shape[2]):
+            bucket = _xxh_hash_long(sig[:, :, r], bucket)
+        return pa.RecordBatch.from_arrays(
+            [
+                pa.array(np.repeat(ids, n_bands)),
+                pa.array(np.tile(bands, len(ids))),
+                pa.array(bucket.ravel().view(np.int64)),
+            ],
+            names=["doc_id", "band", "bucket"],
+        )
+
+    open_id = open_min = None
+    for rb in batches:
+        if not rb.num_rows:
+            continue
+        ids = rb.column(0).to_numpy(zero_copy_only=False)
+        h = rb.column(1).to_numpy().view(np.uint64)
+        starts = np.flatnonzero(np.r_[True, ids[1:] != ids[:-1]])
+        sig = _xxh_hash_int(rows[None, :], h[:, None]).view(np.int64)
+        mins = np.minimum.reduceat(sig, starts, axis=0)
+        run_ids = ids[starts]
+        if open_id is not None:
+            if run_ids[0] == open_id[0]:
+                np.minimum(mins[0], open_min[0], out=mins[0])
+            else:
+                run_ids = np.concatenate([open_id, run_ids])
+                mins = np.concatenate([open_min, mins])
+        if len(run_ids) > 1:
+            yield banded(run_ids[:-1], mins[:-1])
+        open_id, open_min = run_ids[-1:].copy(), mins[-1:].copy()
+    if open_id is not None:
+        yield banded(open_id, open_min)
+
 
 def minhash_banded(docs: DataFrame, n_hashes: int = N_HASHES, n_bands: int = N_BANDS) -> DataFrame:
-    """(doc_id, band, bucket) LSH assignments, computed relationally.
+    """(doc_id, band, bucket) LSH assignments: ``n_hashes`` MinHash rows per
+    document, banded ``n_bands`` ways.
 
-    Shape: explode distinct shingles → ONE hash-groupBy(doc_id) computing all
-    `n_hashes` signature rows as `min(xxhash64(shingle, seed))` aggregates —
-    partial (map-side) min combine means the shuffle carries n_hashes longs
-    per doc, never the shingles — → per-band bucket = xxhash64 over the
-    band's signature rows → unpivot to (band, bucket).
+    Shape: explode each document's distinct shingles and hash each ONCE in
+    the JVM (``xxhash64(shingle)``, codegen), then one ``mapInArrow``
+    kernel (``_minhash_bands``) derives the signature rows as
+    ``hashInt(i, h)``, takes each document's min over its contiguous run
+    of rows and emits the bands' buckets. The values are those of the
+    relational form it replaced (``min(xxhash64(shingle, lit(i)))`` per
+    doc_id, then ``xxhash64(lit(b), band rows...)``; kept in
+    tests/test_hot_path_kernels.py as the reference), bit for bit, by
+    Spark's column-seeded multi-column hash. That form hashed every string
+    n_hashes times and shuffled n_hashes longs per document to group them;
+    here each string is hashed once and nothing is shuffled before the
+    consumer's bucket join.
 
-    (A nested-array formulation — transform/array_min over an array column —
-    is O(1) shuffles too but Catalyst's CollapseProject inlines the signature
-    expression into every band, recomputing it 8×; this relational form
-    evaluates each hash exactly once and scales its shuffle with docs, not
-    text.)
-    """
-    rows_per_band = n_hashes // n_bands
+    Precondition: ``doc_id`` is the table's key. A document's rows must be
+    one run within one partition, which holds when each doc_id is one row
+    of ``docs``. Rows with a null ``doc_id`` are dropped first: they could
+    never pair, because ``a.doc_id < b.doc_id`` is null."""
     # widen degenerate scan partitioning BEFORE the ~200x shingle fan-out
     # (no-op whenever the scan already has >= cores splits — i.e. at scale)
-    sh = spread(docs).select(
-        "doc_id", F.explode(shingles(normalized_text())).alias("shingle")
+    hashed = (
+        spread(docs)
+        .filter(F.col("doc_id").isNotNull())
+        .select("doc_id", F.explode(shingles(normalized_text())).alias("shingle"))
+        .select("doc_id", F.xxhash64("shingle").alias("h"))
     )
-    sig = sh.groupBy("doc_id").agg(
-        *[F.min(F.xxhash64("shingle", F.lit(i))).alias(f"h{i}") for i in range(n_hashes)]
-    )
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(
-                F.lit(b), *[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
-            ).alias("bucket"),
-        )
-        for b in range(n_bands)
-    ]
-    banded = sig.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("bb")
-    ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+    id_type = docs.schema["doc_id"].dataType.simpleString()
+
+    def bands(batches):
+        yield from _minhash_bands(batches, n_hashes, n_bands)
+
+    banded = hashed.mapInArrow(bands, f"doc_id {id_type}, band int, bucket long")
     # Both consumers SELF-JOIN this frame, and Spark's ReuseExchange does
     # not fire across the band/bucket join's two sides here (verified on
     # the executed AQE plan: 2 full scans, 0 ReusedExchange) — without a
-    # materialization barrier the whole shingle-explode + n_hashes
-    # signature pass runs twice. The barrier is a DISK_ONLY pin + eager
-    # count, NOT localCheckpoint: localCheckpoint stores MEMORY_AND_DISK
+    # materialization barrier the whole shingle-explode + signature kernel
+    # runs twice (q_dedup_minhash on the 5,000-document benchmark fixture,
+    # cache-cleared medians on local[2]: 1.19 s pinned, 1.68 s unpinned).
+    # The barrier is a DISK_ONLY pin + eager count, NOT localCheckpoint: localCheckpoint stores MEMORY_AND_DISK
     # deserialized blocks, and reading those back promotes them into the
     # heap (BlockManager.maybeCacheDiskValuesInMemory) — at sf100-mut the
     # 128-hash/64-band ngram-gate config makes this frame 320M rows

@@ -1,30 +1,47 @@
 """Loaders for the driver's TPC-H-ish parquet test tables (TESTDATA.md).
 
-Explicit schemas everywhere — the engine never uses inferSchema (the
-reference double-scans every CSV for inference, reference: etl/extract.py:67;
-see SURVEY.md §4 item 3). For parquet the schema travels in the footer, but we
-still pin expected schemas so a drifted file fails loudly instead of silently
-changing plan shapes.
+Every read passes a pinned schema (``SCHEMAS``) to ``spark.read.schema``,
+so building a query over these tables launches no job: an unpinned
+``spark.read.parquet`` infers the schema from the files' footers, one
+Spark job per table reference. The pins are what Spark infers from the files
+(asserted per fixture scale in tests/test_testdata_catalog.py), so a
+drifted file fails loudly instead of silently changing plan shapes. The
+one column whose layout has changed across regenerations of the tables,
+``events.ts``, is typed from a pyarrow footer read (metadata only, no Spark
+job; see ``load_table``).
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
+#: Each table's schema, as Spark infers it from the parquet files.
+#: ``{ts}`` is ``events.ts``' type, chosen per file by ``_events_ts_type``.
+SCHEMAS = {
+    "region": "r_regionkey int, r_name string",
+    "nation": "n_nationkey int, n_name string, n_regionkey int",
+    "customer": "c_custkey bigint, c_name string, c_nationkey int, "
+    "c_acctbal double, c_mktsegment string",
+    "supplier": "s_suppkey bigint, s_name string, s_nationkey int, s_acctbal double",
+    "part": "p_partkey bigint, p_name string, p_brand string, p_type string, "
+    "p_size int, p_retailprice double",
+    "orders": "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
+    "o_totalprice double, o_orderdate timestamp_ntz, o_orderpriority string",
+    "lineitem": "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, "
+    "l_linenumber int, l_quantity double, l_extendedprice double, "
+    "l_discount double, l_tax double, l_returnflag string, "
+    "l_linestatus string, l_shipdate timestamp_ntz",
+    "events": "event_id bigint, ts {ts}, user_id bigint, event_type string, "
+    "value double, props string",
+    "documents": "doc_id bigint, text string, lang string, source string, n_chars bigint",
+    "embeddings": "vec_id bigint, embedding array<float>, label int",
+}
+
+TABLES = list(SCHEMAS)
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one test table. Column pruning + predicate pushdown reach the
@@ -46,10 +63,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Either way callers — and the DuckDB oracles — see one schema:
     µs-precision TimestampType.
 
-    NB the ``nanosAsLong`` flag is a SESSION-level conf and stays set after
-    the first events read (restoring it immediately would break the lazy
-    scan's execution). It is a no-op for non-nanos files, so setting it
-    unconditionally is safe here; a mixed-precision lake would need
+    NB the ``nanosAsLong`` flag is a SESSION-level conf, set only when the
+    file is in the nanos layout, and it stays set after that read
+    (restoring it immediately would break the lazy scan's execution). It
+    is a no-op for non-nanos files; a mixed-precision lake would need
     per-read normalization instead."""
     df = _read(spark, sf_dir, name)
     if name == "events":
@@ -65,9 +82,56 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = SCHEMAS[name]
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(path)
+        ts = _events_ts_type(path)
+        if ts == "bigint":
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        schema = schema.format(ts=ts)
+    return spark.read.schema(schema).parquet(path)
+
+
+def _events_ts_type(path: str) -> str:
+    """The type Spark gives ``events.ts`` (under ``nanosAsLong``), from the
+    first data file's parquet footer: ``bigint`` for INT64 nanos,
+    ``timestamp`` for INT96 or UTC-adjusted micros/millis, and
+    ``timestamp_ntz`` for unadjusted ones, which is also the answer when
+    there is no file to read (Spark then raises on the path, or reads an
+    empty directory as empty)."""
+    import pyarrow.parquet as pq
+
+    files = _parquet_files(path)
+    if not files:
+        return "timestamp_ntz"
+    footer = pq.ParquetFile(files[0]).schema
+    col = footer.column(footer.names.index("ts"))
+    logical = json.loads(col.logical_type.to_json())
+    if col.physical_type == "INT64" and logical.get("timeUnit") == "nanoseconds":
+        return "bigint"
+    if col.physical_type == "INT96" or logical.get("isAdjustedToUTC"):
+        return "timestamp"
+    return "timestamp_ntz"
+
+
+def _parquet_files(path: str) -> list[str]:
+    """The data files Spark reads at ``path`` (a file, or a directory walked
+    recursively), [] when there are none. Hidden/staging paths are skipped
+    to match Spark/Hive path filtering (ADVICE r11): an aborted write's
+    ``_temporary/**/part-*.parquet`` or dot-prefixed files are invisible to
+    ``spark.read`` but WOULD be seen by a naive walk."""
+    if os.path.isfile(path):
+        return [path]
+    return sorted(
+        os.path.join(root, f)
+        for root, _dirs, fs in os.walk(path)
+        for f in fs
+        if f.endswith(".parquet")
+        and not any(
+            part.startswith(("_", "."))
+            for part in os.path.join(os.path.relpath(root, path), f).split(os.sep)
+            if part != "."
+        )
+    )
 
 
 def table_row_count(sf_dir: str, name: str) -> int | None:
@@ -84,35 +148,13 @@ def table_row_count(sf_dir: str, name: str) -> int | None:
     spec), so this equals ``count()`` for any committed dataset; a pytest
     asserts that equality on the fixtures
     (tests/test_approx_and_lsh.py::test_footer_row_count_matches_scan).
-
-    Hidden/staging paths are skipped to match Spark/Hive path filtering
-    (ADVICE r11): an aborted write's ``_temporary/**/part-*.parquet`` or
-    dot-prefixed files are invisible to ``spark.read`` but WOULD be
-    summed by a naive walk, silently inflating the count."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    The files summed are ``_parquet_files``', which skips staging paths."""
+    files = _parquet_files(os.path.join(sf_dir, f"{name}.parquet"))
+    if not files:
+        return None
     try:
         import pyarrow.parquet as pq
 
-        if os.path.isdir(path):
-            files = [
-                os.path.join(root, f)
-                for root, _dirs, fs in os.walk(path)
-                for f in fs
-                if f.endswith(".parquet")
-                and not any(
-                    part.startswith(("_", "."))
-                    for part in os.path.join(
-                        os.path.relpath(root, path), f
-                    ).split(os.sep)
-                    if part != "."
-                )
-            ]
-            if not files:
-                return None
-        elif os.path.isfile(path):
-            files = [path]
-        else:
-            return None
         return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
     except Exception:
         return None

@@ -38,6 +38,8 @@ ANSI_SAMPLE = [
     "q_weighted_median",      # two-phase cumulative-weight div
     "q_math_funcs",           # raw scalar math surface
     "q_udtf_installments",    # Python fan-out of divmod cents
+    "q_dedup_minhash",        # wrapping xxhash64 arithmetic in numpy
+    "q_dedup_ngram_jaccard",  # the same kernel, 128 hashes / 64 bands
     "q_zorder" if "q_zorder" in QUERIES else "q_agg_basic",
 ]
 

@@ -6,7 +6,11 @@ keep their results exactly:
   * ``similarity.streamed_top_k`` (the numpy fold inside one Arrow pass,
     behind q_similarity_topk and _np) against the JVM ``scored_pairs``
     brute force, across Arrow batch boundaries and on degenerate vectors
-    under both ANSI settings.
+    under both ANSI settings;
+  * ``dedup.minhash_banded`` (one xxhash64 per shingle, then the numpy
+    MinHash/band kernel, behind q_dedup_minhash and q_dedup_ngram_jaccard)
+    against the relational signature pass it replaced, kept below as the
+    reference, across Arrow batch boundaries and on degenerate documents.
 """
 
 from __future__ import annotations
@@ -20,7 +24,9 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as contract
 from finegourmet_spark.operators import similarity as sim
-from finegourmet_spark.operators.dedup import normalized_text, shingle_seq
+from finegourmet_spark.functions.partitioning import spread
+from finegourmet_spark.operators import dedup
+from finegourmet_spark.operators.dedup import normalized_text, shingle_seq, shingles
 from finegourmet_spark.sources.testdata import load_table
 
 QUERIES = contract.queries()
@@ -170,3 +176,99 @@ def test_streamed_top_k_degenerate_vectors_equal_jvm(spark, degenerate_dir, ansi
             with confs(spark, **{BATCH: size}):
                 for gemm in (False, True):
                     assert outcome(sim.streamed_top_k(e, gemm)) == want, (size, gemm)
+
+
+def jvm_minhash_banded(docs, n_hashes, n_bands):
+    """The relational pass minhash_banded replaced: every signature row is
+    ``min(xxhash64(shingle, lit(i)))`` over a groupBy(doc_id), and each
+    band's bucket is ``xxhash64(lit(b), <the band's rows>)``."""
+    rows_per_band = n_hashes // n_bands
+    sh = spread(docs).select("doc_id", F.explode(shingles(normalized_text())).alias("shingle"))
+    sig = sh.groupBy("doc_id").agg(
+        *[F.min(F.xxhash64("shingle", F.lit(i))).alias(f"h{i}") for i in range(n_hashes)]
+    )
+    band_cols = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.xxhash64(
+                F.lit(b), *[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
+            ).alias("bucket"),
+        )
+        for b in range(n_bands)
+    ]
+    return sig.select("doc_id", F.explode(F.array(*band_cols)).alias("bb")).select(
+        "doc_id", "bb.band", "bb.bucket"
+    )
+
+
+LONG_DOC = " ".join(f"w{i % 13}x{i}" for i in range(40))
+DEGENERATE_DOCS = [
+    (None, "a null doc id has shingles too"),
+    (1, None),
+    (2, ""),
+    (3, "   "),
+    (4, "one"),
+    (5, "two tokens"),
+    (6, "three whole tokens"),
+    (7, "😀 emoji 🎉 as whole tokens 😀 🎉"),
+    (8, "emo😀ji in😀side tok🎉ens"),
+    (9, LONG_DOC),  # 38 shingles: six Arrow batches of 7 rows
+    (10, LONG_DOC.upper()),  # the same shingles after normalization
+    (11, "three whole tokens"),
+]
+
+
+def banded_rows(df):
+    try:
+        return sorted(tuple(r) for r in df.collect())
+    finally:
+        df.unpersist()
+
+
+@pytest.mark.parametrize("n_hashes,n_bands", [(32, 8), (128, 64)])
+@pytest.mark.parametrize("frame", ["sf", "degenerate"])
+def test_minhash_kernel_equals_jvm(spark, sf_dir, frame, n_hashes, n_bands):
+    """Identical (doc_id, band, bucket) rows at 7 rows per Arrow batch
+    (runs cut across batches) and 10000; rows with a null doc_id, which
+    could never pair, are dropped before the kernel."""
+    if frame == "sf":
+        docs = load_table(spark, sf_dir, "documents")
+    else:
+        docs = spark.createDataFrame(DEGENERATE_DOCS, "doc_id long, text string")
+    want = sorted(
+        tuple(r) for r in jvm_minhash_banded(docs, n_hashes, n_bands).collect()
+        if r["doc_id"] is not None
+    )
+    assert want and len({r[0] for r in want}) * n_bands == len(want)
+    for size in ("7", "10000"):
+        with confs(spark, **{BATCH: size}):
+            assert banded_rows(dedup.minhash_banded(docs, n_hashes, n_bands)) == want, size
+
+
+def test_minhash_kernel_carries_runs_across_any_cut():
+    """The kernel alone: one stream of (doc_id, h) rows gives the same
+    bands whether it arrives as one batch or cut at every row boundary into
+    two, or into single rows (a document's run then spans many batches)."""
+    import numpy as np
+    import pyarrow as pa
+
+    rnd = np.random.default_rng(5)
+    ids = np.repeat(np.arange(6, dtype=np.int64), [1, 4, 2, 9, 1, 3])
+    h = rnd.integers(-(2**63), 2**63 - 1, size=len(ids), dtype=np.int64)
+
+    def run(cuts):
+        bounds = [0, *cuts, len(ids)]
+        batches = [
+            pa.RecordBatch.from_arrays(
+                [pa.array(ids[a:b]), pa.array(h[a:b])], names=["doc_id", "h"]
+            )
+            for a, b in zip(bounds, bounds[1:])
+        ]
+        out = pa.Table.from_batches(list(dedup._minhash_bands(iter(batches), 32, 8)))
+        return sorted(zip(*(out.column(c).to_pylist() for c in range(3))))
+
+    want = run([])
+    assert len(want) == 6 * 8
+    for cut in range(len(ids) + 1):
+        assert run([cut]) == want, cut
+    assert run(list(range(1, len(ids)))) == want

@@ -326,7 +326,7 @@ def test_star_scale_replicator_factor3(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("star_scale3"))
     subprocess.run(
         [_sys.executable, "tools/make_star_scale.py", "3", root],
-        check=True, cwd="/root/repo",
+        check=True, cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
     res = run_pipeline(
         spark,

@@ -23,7 +23,7 @@ the column-shifted quarantine rows (they still quarantine in every copy).
 
 Usage: python tools/make_star_scale.py [factor] [out_dir]
   factor  : copies of the reference data (default 1000)
-  out_dir : default /root/repo/.scratch/star_sf1
+  out_dir : default .scratch/star_sf1 in the repository holding this script
 """
 
 from __future__ import annotations
@@ -88,8 +88,8 @@ def write_cegid(out: Path, factor: int) -> int:
 
 def main() -> int:
     factor = int(sys.argv[1]) if len(sys.argv) > 1 else 1000
-    out = Path(sys.argv[2]) if len(sys.argv) > 2 else Path(
-        "/root/repo/.scratch/star_sf1"
+    out = Path(sys.argv[2]) if len(sys.argv) > 2 else (
+        Path(__file__).resolve().parent.parent / ".scratch" / "star_sf1"
     )
     if out.exists():
         shutil.rmtree(out)
