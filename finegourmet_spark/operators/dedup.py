@@ -8,10 +8,8 @@ Scale design (the 100 TB story):
     Arrow kernel takes every document's signature over its contiguous run
     of shingle rows and emits (doc_id, band, bucket) — no shuffle before
     the bucket self-join, where candidate pairs only ever meet inside a
-    bucket: no O(n²) comparison, and bucket skew is bounded by band width.
-    The kernel's values are the relational xxhash64 form's, bit for bit
-    (``XXH64.hashInt(i, xxhash64(s)) = xxhash64(s, lit(i))``; see
-    ``minhash_banded``), which requires doc_id to be the table's key;
+    bucket: no O(n²) comparison, and bucket skew is bounded by band width
+    (``minhash_banded``: the hash identity and the doc_id precondition);
   * SimHash = 64-bit signature per doc, near-dup = same signature (or
     Hamming-adjacent via rotate-and-bucket), again a key-only shuffle;
   * exact n-gram Jaccard verifies LSH candidates (the expensive check runs
@@ -172,9 +170,10 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     dataset, so on unlucky data the exact oracle could diverge. This config
     is 64 bands × 2 rows (128 hashes): miss probability 0.75^64 ≈ 1e-8 at
     θ=0.5 and ≈1e-26 at the θ≥0.9 pairs the generator emits — beyond any
-    driver tolerance by a wide margin, at 2× the (still linear, still
-    text-free) signature shuffle. Recall vs the ungated corpus-wide exact
-    formulation is asserted in tests/test_llm_ops.py."""
+    driver tolerance by a wide margin, at 4× q_dedup_minhash's per-shingle
+    signature work (still linear; no shuffle before the bucket join).
+    Recall vs the ungated corpus-wide exact formulation is asserted in
+    tests/test_llm_ops.py."""
     docs = t(spark, sf_dir, "documents")
     # The exact-verify join ships each candidate doc's shingle SET twice
     # across the cluster. Carry xxhash64(shingle) longs (8 B) instead of
@@ -509,14 +508,12 @@ def minhash_banded(docs: DataFrame, n_hashes: int = N_HASHES, n_bands: int = N_B
     the JVM (``xxhash64(shingle)``, codegen), then one ``mapInArrow``
     kernel (``_minhash_bands``) derives the signature rows as
     ``hashInt(i, h)``, takes each document's min over its contiguous run
-    of rows and emits the bands' buckets. The values are those of the
-    relational form it replaced (``min(xxhash64(shingle, lit(i)))`` per
-    doc_id, then ``xxhash64(lit(b), band rows...)``; kept in
-    tests/test_hot_path_kernels.py as the reference), bit for bit, by
-    Spark's column-seeded multi-column hash. That form hashed every string
-    n_hashes times and shuffled n_hashes longs per document to group them;
-    here each string is hashed once and nothing is shuffled before the
-    consumer's bucket join.
+    of rows and emits the bands' buckets; nothing is shuffled before the
+    consumer's bucket join. Spark's multi-column xxhash64 seeds each
+    column's hash with the previous column's, so the values are bit for
+    bit ``min(xxhash64(shingle, lit(i)))`` per doc_id and
+    ``xxhash64(lit(b), band rows...)`` (the JVM reference in
+    tests/test_hot_path_kernels.py).
 
     Precondition: ``doc_id`` is the table's key. A document's rows must be
     one run within one partition, which holds when each doc_id is one row
@@ -542,9 +539,10 @@ def minhash_banded(docs: DataFrame, n_hashes: int = N_HASHES, n_bands: int = N_B
     # materialization barrier the whole shingle-explode + signature kernel
     # runs twice (q_dedup_minhash on the 5,000-document benchmark fixture,
     # cache-cleared medians on local[2]: 1.19 s pinned, 1.68 s unpinned).
-    # The barrier is a DISK_ONLY pin + eager count, NOT localCheckpoint: localCheckpoint stores MEMORY_AND_DISK
-    # deserialized blocks, and reading those back promotes them into the
-    # heap (BlockManager.maybeCacheDiskValuesInMemory) — at sf100-mut the
+    # The barrier is a DISK_ONLY pin + eager count, NOT localCheckpoint:
+    # localCheckpoint stores MEMORY_AND_DISK deserialized blocks, and
+    # reading those back promotes them into the heap
+    # (BlockManager.maybeCacheDiskValuesInMemory) — at sf100-mut the
     # 128-hash/64-band ngram-gate config makes this frame 320M rows
     # (5M docs × 64 bands), whose deserialized promotion OOMed a 24 GB
     # heap (measured r11 — the same MEMORY_AND_DISK failure class as

@@ -6,20 +6,23 @@ so building a query over these tables launches no job: an unpinned
 Spark job per table reference. The pins are what Spark infers from the files
 (asserted per fixture scale in tests/test_testdata_catalog.py), so a
 drifted file fails loudly instead of silently changing plan shapes. The
-one column whose layout has changed across regenerations of the tables,
-``events.ts``, is typed from a pyarrow footer read (metadata only, no Spark
-job; see ``load_table``).
+timestamp columns are the exception: their parquet layout (unit, UTC
+adjustment, INT96) is a writer's choice, and ``events.ts`` has already
+changed layout across regenerations of the tables, so each is typed from a
+pyarrow footer read (metadata only, no Spark job; see ``_timestamp_types``).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import string
 
 from pyspark.sql import DataFrame, SparkSession
 
-#: Each table's schema, as Spark infers it from the parquet files.
-#: ``{ts}`` is ``events.ts``' type, chosen per file by ``_events_ts_type``.
+#: Each table's schema, as Spark infers it from the parquet files. A
+#: ``{column}`` placeholder is a timestamp column's type, chosen per file by
+#: ``_timestamp_types``.
 SCHEMAS = {
     "region": "r_regionkey int, r_name string",
     "nation": "n_nationkey int, n_name string, n_regionkey int",
@@ -29,11 +32,11 @@ SCHEMAS = {
     "part": "p_partkey bigint, p_name string, p_brand string, p_type string, "
     "p_size int, p_retailprice double",
     "orders": "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
-    "o_totalprice double, o_orderdate timestamp_ntz, o_orderpriority string",
+    "o_totalprice double, o_orderdate {o_orderdate}, o_orderpriority string",
     "lineitem": "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, "
     "l_linenumber int, l_quantity double, l_extendedprice double, "
     "l_discount double, l_tax double, l_returnflag string, "
-    "l_linestatus string, l_shipdate timestamp_ntz",
+    "l_linestatus string, l_shipdate {l_shipdate}",
     "events": "event_id bigint, ts {ts}, user_id bigint, event_type string, "
     "value double, props string",
     "documents": "doc_id bigint, text string, lang string, source string, n_chars bigint",
@@ -83,34 +86,38 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     schema = SCHEMAS[name]
-    if name == "events":
-        ts = _events_ts_type(path)
-        if ts == "bigint":
+    columns = [f for _, f, _, _ in string.Formatter().parse(schema) if f]
+    if columns:
+        types = _timestamp_types(path, columns)
+        if "bigint" in types.values():
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        schema = schema.format(ts=ts)
+        schema = schema.format(**types)
     return spark.read.schema(schema).parquet(path)
 
 
-def _events_ts_type(path: str) -> str:
-    """The type Spark gives ``events.ts`` (under ``nanosAsLong``), from the
-    first data file's parquet footer: ``bigint`` for INT64 nanos,
+def _timestamp_types(path: str, columns: list[str]) -> dict[str, str]:
+    """The type Spark gives each timestamp column (under ``nanosAsLong``),
+    from the first data file's parquet footer: ``bigint`` for INT64 nanos,
     ``timestamp`` for INT96 or UTC-adjusted micros/millis, and
     ``timestamp_ntz`` for unadjusted ones, which is also the answer when
     there is no file to read (Spark then raises on the path, or reads an
-    empty directory as empty)."""
+    empty directory as empty) or the file lacks the column (Spark reads it
+    as nulls)."""
     import pyarrow.parquet as pq
 
     files = _parquet_files(path)
-    if not files:
-        return "timestamp_ntz"
-    footer = pq.ParquetFile(files[0]).schema
-    col = footer.column(footer.names.index("ts"))
-    logical = json.loads(col.logical_type.to_json())
-    if col.physical_type == "INT64" and logical.get("timeUnit") == "nanoseconds":
-        return "bigint"
-    if col.physical_type == "INT96" or logical.get("isAdjustedToUTC"):
-        return "timestamp"
-    return "timestamp_ntz"
+    footer = pq.ParquetFile(files[0]).schema if files else None
+    types = dict.fromkeys(columns, "timestamp_ntz")
+    for name in columns:
+        if footer is None or name not in footer.names:
+            continue
+        col = footer.column(footer.names.index(name))
+        logical = json.loads(col.logical_type.to_json())
+        if col.physical_type == "INT64" and logical.get("timeUnit") == "nanoseconds":
+            types[name] = "bigint"
+        elif col.physical_type == "INT96" or logical.get("isAdjustedToUTC"):
+            types[name] = "timestamp"
+    return types
 
 
 def _parquet_files(path: str) -> list[str]:

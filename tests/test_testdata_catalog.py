@@ -34,6 +34,40 @@ def test_pinned_schemas_equal_inferred(spark, scale):
         assert _read(spark, scale, name).schema == inferred, (scale, name)
 
 
+@pytest.mark.parametrize("scale", SCALES, ids=os.path.basename)
+def test_document_ids_are_keys(spark, scale):
+    """``minhash_banded`` needs ``documents.doc_id`` to be the table's key
+    (each document one contiguous run of shingle rows)."""
+    if not os.path.exists(f"{scale}/documents.parquet"):
+        pytest.skip(f"no documents table at {scale}")
+    docs = load_table(spark, scale, "documents")
+    assert docs.filter("doc_id IS NULL").count() == 0
+    assert docs.groupBy("doc_id").count().filter("count > 1").count() == 0
+
+
+@pytest.mark.parametrize("layout", ["micros", "utc", "int96"])
+@pytest.mark.parametrize(
+    "name, column", [("orders", "o_orderdate"), ("lineitem", "l_shipdate")]
+)
+def test_timestamp_columns_follow_the_footer(spark, sf_dir, tmp_path, name, column, layout):
+    """The TPC-H date columns are typed from the footer too: a rewrite in
+    another timestamp layout still reads as Spark infers it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(f"{sf_dir}/{name}.parquet")
+    i = table.schema.get_field_index(column)
+    tz = None if layout == "micros" else "UTC"
+    table = table.set_column(i, column, table[column].cast(pa.timestamp("us", tz=tz)))
+    pq.write_table(
+        table, tmp_path / f"{name}.parquet", use_deprecated_int96_timestamps=layout == "int96"
+    )
+    inferred = spark.read.parquet(str(tmp_path / f"{name}.parquet")).schema
+    got = _read(spark, str(tmp_path), name)
+    assert got.schema == inferred
+    assert got.count() == table.num_rows
+
+
 @pytest.fixture()
 def nanos_as_long(spark):
     prev = spark.conf.get(NANOS_AS_LONG)
